@@ -32,10 +32,10 @@ object Bench {
     Tables.names.foreach(n => spark.read.parquet(s"$sfDir/$n.parquet").count())
     // ALSO warm the job-submission path itself: scheduler, task serializer,
     // result fetch, and the codegen cache lookups live in JVM code that C2
-    // only compiles after ~dozens of job submissions. Measured (FloorProbe,
-    // r11): in a session that has run ~100 tiny jobs, q01 costs 93 ms; in a
-    // session that has run only the ~12 warmup jobs above, the SAME query
-    // costs 230 ms — a 2.5× phantom tax on every short query, paid by
+    // only compiles after ~dozens of job submissions. Measured (r11 floor
+    // probe; floor table in NOTES_r12.md): in a session that has run ~100
+    // tiny jobs, q01 costs 93 ms; in a session that has run only the ~12
+    // warmup jobs above, the SAME query costs 230 ms — a 2.5× phantom tax on every short query, paid by
     // whichever queries run first (alphabetically q01–q34, exactly the
     // relational core the DuckDB comparison reads). ~60 empty-range jobs
     // cost ~4 s once and take the submission path to steady state — the
@@ -57,7 +57,7 @@ object Bench {
     val floorLaunchMs = minOf(20)(spark.range(1).count()) * 1000
     // the MINIMAL job (one slice, two tasks): separates the per-JOB
     // constant from the per-task dispatch the default-parallelism floor
-    // above pays cpus× per stage (FloorProbe decomposition, r16) — a
+    // above pays cpus× per stage (r16 decomposition, NOTES_r16.md §4) — a
     // second calibration sentinel for cross-round host comparison
     val floorLaunch1Ms = minOf(20)(spark.range(1L, 2L, 1L, 1).count()) * 1000
     val floorQ13Ms = SparkEntry.queries.get("q13_count")

@@ -434,11 +434,11 @@ object ScaleStress {
           s"$dir/float", nlist = 64); 0L
       }
       val (tQ, _) = timed {
-        AnnStreams.buildQuantizedIndex(emb10, "vec_id", "embedding",
-          s"$dir/int8", nlist = 64); 0L
+        AnnStreams.buildServingIndex(emb10, "vec_id", "embedding",
+          s"$dir/int8", nlist = 64, codec = AnnStreams.Codec.Int8); 0L
       }
       val fIdx = AnnStreams.openServingIndex(spark, s"$dir/float")
-      val qIdx = AnnStreams.openQuantizedIndex(spark, s"$dir/int8")
+      val qIdx = AnnStreams.openServingIndex(spark, s"$dir/int8")
       def recallPpm(served: DataFrame): Double = {
         val hit = served.select($"query_id", $"item_id")
           .join(truth, Seq("query_id", "item_id")).count()
@@ -450,7 +450,7 @@ object ScaleStress {
             "vec_id", "ts", "embedding", k = 10, nprobe = np))
         Seq(1, 4).foreach { rf =>
           results(s"pq_int8_recall_ppm_np${np}_rf$rf") = recallPpm(
-            AnnStreams.annServeQuantizedBatch(queries, qIdx,
+            AnnStreams.annServeBatch(queries, qIdx,
               "vec_id", "ts", "embedding", k = 10, nprobe = np, refine = rf))
         }
       }
@@ -472,7 +472,7 @@ object ScaleStress {
         fs.getContentSummary(hp).getLength.toDouble
       }
       results("pq_float_cells_bytes") = dirBytes(s"$dir/float/cells")
-      results("pq_int8_cells_bytes") = dirBytes(s"$dir/int8/cellsq")
+      results("pq_int8_cells_bytes") = dirBytes(s"$dir/int8/cells")
       results("pq_build_float_s") = tF
       results("pq_build_int8_s") = tQ
       results("pq_queries") = nQ.toDouble
@@ -722,7 +722,7 @@ object ScaleStress {
     // autoBroadcastJoinThreshold=-1, asserts the shape (zero broadcast
     // operators; zero exchanges above any bucketed corpus scan), and
     // prices the degradation honestly: q/s + shuffle bytes, broadcast vs
-    // disabled, float + quantized families on the 10x corpus with a live
+    // disabled, float + int8 codecs on the 10x corpus with a live
     // append tail.
     if (wanted("nobroadcast")) {
       import graft.streaming.AnnStreams
@@ -737,17 +737,16 @@ object ScaleStress {
       val dir = s"$outDir/nobc"
       val fBuilt = AnnStreams.buildServingIndex(emb10, "vec_id", "embedding",
         s"$dir/f", nlist = 64)
-      val qBuilt = AnnStreams.buildQuantizedIndex(emb10, "vec_id", "embedding",
-        s"$dir/q", nlist = 64)
+      val qBuilt = AnnStreams.buildServingIndex(emb10, "vec_id", "embedding",
+        s"$dir/q", nlist = 64, codec = AnnStreams.Codec.Int8)
       // a live tail: the appends branch must keep its contract under the
       // same disable (it joins unbucketed — small-fraction by design)
       val tail = emb10.filter($"vec_id" % 20 === 3)
         .select(($"vec_id" + lit(10 * nEmb)).as("vec_id"), $"embedding")
       AnnStreams.landAppendBatch(tail, fBuilt, "vec_id", "embedding", batchId = 0L)
-      AnnStreams.landQuantizedAppendBatch(tail, qBuilt, "vec_id", "embedding",
-        batchId = 0L)
+      AnnStreams.landAppendBatch(tail, qBuilt, "vec_id", "embedding", batchId = 0L)
       val float = AnnStreams.openServingIndex(spark, s"$dir/f")
-      val quant = AnnStreams.openQuantizedIndex(spark, s"$dir/q")
+      val quant = AnnStreams.openServingIndex(spark, s"$dir/q")
       val queries = emb10.filter($"vec_id" % 7 === 0)
         .select($"vec_id",
           lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
@@ -756,7 +755,7 @@ object ScaleStress {
       val nQ = queries.count()
       def serveF() = AnnStreams.annServeBatch(queries, float,
         "vec_id", "ts", "embedding", k = 10, nprobe = 4)
-      def serveQ() = AnnStreams.annServeQuantizedBatch(queries, quant,
+      def serveQ() = AnnStreams.annServeBatch(queries, quant,
         "vec_id", "ts", "embedding", k = 10, nprobe = 4, refine = 4)
       // shuffle-byte meter: stage-level task metrics, quiesced between runs
       // (listener events are async — wait until the stage count stops

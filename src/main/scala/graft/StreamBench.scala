@@ -465,20 +465,10 @@ object StreamBench {
     //  - `on_green`: serving against the retrained index.
     // The receipt is the causal chain t(drift) < t(due) < t(retrain done)
     // plus q/s per phase and the poll/act counters.
-    // The loop is FAMILY-GENERIC: one implementation drives the float and
-    // the int8-quantized serving indexes through the identical policy
-    // (maintenanceDue / scheduledNlist read the same health schema for
-    // both families by design), so the two receipts differ only in what
-    // the family's own build/serve/retrain cost — not in loop structure.
-    final case class ServingFamily[I](
-        build: String => I,
-        open: String => I,
-        policy: graft.streaming.Maintenance.Family,
-        serveStream: (DataFrame, I) => DataFrame,
-        serveBatch: (DataFrame, I) => DataFrame,
-        landDrift: (DataFrame, I) => Unit,
-        nlistOf: I => Int,
-        rowsOf: I => Long)
+    // The loop is CODEC-GENERIC: one implementation drives the float and
+    // the int8 serving index through the identical policy (one index, one
+    // maintenance family), so the two receipts differ only in what the
+    // codec's own build/serve/retrain cost — not in loop structure.
     lazy val annCorpus = spark.read.parquet(s"$corpusDir/embeddings.parquet")
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "embedding")
     // The poller implements the CANONICAL decision rule in full —
@@ -490,30 +480,32 @@ object StreamBench {
     // REQUIRES the branch the plant was designed to fire — a compaction
     // that masks drift, or a retrain triggered by healthy growth, both
     // fail loudly.
-    def servingPolicyLeg[I](name: String, fam: ServingFamily[I],
+    def servingPolicyLeg(name: String, codec: graft.streaming.AnnStreams.Codec,
         plant: (DataFrame, Long) => DataFrame,
         expectAct: String): Seq[String] =
       if (!wanted(name)) Seq.empty else {
-        import graft.streaming.AnnStreams
+        import graft.streaming.{AnnStreams, Maintenance}
         val e = annCorpus
         val stride = e.agg(max(col("vec_id"))).head().getLong(0) + 1
         val idxDir = s"$outRoot/$name-idx"
         val greenDir = s"$outRoot/$name-green"
-        val built = fam.build(idxDir)
-        val blue = fam.open(idxDir)
-        def serveLeg(phase: String, idx: I): String =
+        val built = AnnStreams.buildServingIndex(
+          e, "vec_id", "embedding", idxDir, nlist = 64, codec = codec)
+        val blue = AnnStreams.openServingIndex(spark, idxDir)
+        def serveLeg(phase: String, idx: AnnStreams.ServingIndex): String =
           measure(s"${name}_$phase",
-            rate => fam.serveStream(
+            rate => AnnStreams.annServe(
               rate.select(col("value").as("query_id"), col("timestamp").as("ts"),
                 synthVec.as("embedding")),
-              idx),
+              idx, "query_id", "ts", "embedding", k = 10, nprobe = 4,
+              refine = 4, watermarkDelay = "10 seconds"),
             "append", rowsPerBatch = admRowsPerBatch)
-        fam.serveBatch(
+        AnnStreams.annServeBatch(
           spark.range(5000).select(col("id").as("value"))
             .select(col("value").as("query_id"),
               lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
               synthVec.as("embedding")),
-          blue).count()
+          blue, "query_id", "ts", "embedding", k = 10, nprobe = 4, refine = 4).count()
         serveLeg("warm_discard", blue)
         val t0 = System.nanoTime()
         def secs(t: Long): Double = (t - t0) / 1e9
@@ -535,12 +527,11 @@ object StreamBench {
               polls += 1
               if (acted) {
                 pollsAfterSwap += 1
-                val due = fam.policy.due(fam.policy.health(spark, greenDir))
+                val due = Maintenance.Ivf.due(Maintenance.Ivf.health(spark, greenDir))
                 require(!due.retrainDue && !due.compactDue,
                   s"$name: green re-fired maintenance after the swap")
               } else {
-                import graft.streaming.Maintenance
-                Maintenance.tick(spark, fam.policy, idxDir, greenDir,
+                Maintenance.tick(spark, Maintenance.Ivf, idxDir, greenDir,
                   onDue = () => tDueFired = System.nanoTime()) match {
                   case Maintenance.NoOp(_) => ()
                   case a =>
@@ -566,7 +557,8 @@ object StreamBench {
         // the tail lands mid-run through the REAL append path; the plant
         // decides which maintenance branch it must fire
         val tDrift = System.nanoTime()
-        fam.landDrift(plant(e, stride), built)
+        AnnStreams.landAppendBatch(plant(e, stride), built, "vec_id", "embedding",
+          batchId = 0L)
         // serving keeps running on blue while the poller detects and acts
         val mDrifted = serveLeg("drifted", blue)
         // bounded wait: the act must complete near the window, not hang
@@ -585,7 +577,7 @@ object StreamBench {
         // the poller stays live through the green phase (a deployment's
         // poller never stops) — its in-thread require pins that green
         // NEVER re-fires maintenance; we demand it actually polled
-        val green = fam.open(greenDir)
+        val green = AnnStreams.openServingIndex(spark, greenDir)
         val mGreen = serveLeg("on_green", green)
         val deadline2 = System.nanoTime() + 60L * 1000000000L
         while (pollsAfterSwap < 1 && maintErr == null &&
@@ -603,8 +595,8 @@ object StreamBench {
           s""""${name}_polls":$polls""",
           s""""${name}_polls_healthy":$healthyPolls""",
           s""""${name}_polls_after_swap":$pollsAfterSwap""",
-          s""""${name}_green_nlist":${fam.nlistOf(green)}""",
-          s""""${name}_corpus_rows":${fam.rowsOf(green)}""")
+          s""""${name}_green_nlist":${green.nlist}""",
+          s""""${name}_corpus_rows":${green.cells.count()}""")
       }
     // the two plants: a 10% reversed-vector cluster (drifted — must fire
     // the retrain branch) and a 20% verbatim-copy tail (in-distribution
@@ -619,49 +611,15 @@ object StreamBench {
       e.filter(col("vec_id") % 5 === 0)
         .select((col("vec_id") + lit(stride)).as("vec_id"),
           col("embedding"))
-    lazy val floatFamily = {
-      import graft.streaming.AnnStreams
-      ServingFamily[AnnStreams.ServingIndex](
-        build = dir => AnnStreams.buildServingIndex(
-          annCorpus, "vec_id", "embedding", dir, nlist = 64),
-        open = dir => AnnStreams.openServingIndex(spark, dir),
-        policy = graft.streaming.Maintenance.FloatIvf,
-        serveStream = (arrivals, i) => AnnStreams.annServe(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-          watermarkDelay = "10 seconds"),
-        serveBatch = (arrivals, i) => AnnStreams.annServeBatch(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4),
-        landDrift = (drift, i) => AnnStreams.landAppendBatch(
-          drift, i, "vec_id", "embedding", batchId = 0L),
-        nlistOf = _.nlist,
-        rowsOf = _.cells.count())
-    }
-    lazy val quantizedFamily = {
-      import graft.streaming.AnnStreams
-      ServingFamily[AnnStreams.QuantizedIndex](
-        build = dir => AnnStreams.buildQuantizedIndex(
-          annCorpus, "vec_id", "embedding", dir, nlist = 64),
-        open = dir => AnnStreams.openQuantizedIndex(spark, dir),
-        policy = graft.streaming.Maintenance.QuantizedIvf,
-        serveStream = (arrivals, i) => AnnStreams.annServeQuantized(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-          refine = 4, watermarkDelay = "10 seconds"),
-        serveBatch = (arrivals, i) => AnnStreams.annServeQuantizedBatch(
-          arrivals, i, "query_id", "ts", "embedding", k = 10, nprobe = 4,
-          refine = 4),
-        landDrift = (drift, i) => AnnStreams.landQuantizedAppendBatch(
-          drift, i, "vec_id", "embedding", batchId = 0L),
-        nlistOf = _.nlist,
-        rowsOf = _.cellsQ.count())
-    }
+    import graft.streaming.AnnStreams.Codec
     def annPolicyLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, floatFamily, driftPlant, "retrain")
+      servingPolicyLeg(name, Codec.Float, driftPlant, "retrain")
     def qannPolicyLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, quantizedFamily, driftPlant, "retrain")
+      servingPolicyLeg(name, Codec.Int8, driftPlant, "retrain")
     def annPolicyCompactLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, floatFamily, growthPlant, "compact")
+      servingPolicyLeg(name, Codec.Float, growthPlant, "compact")
     def qannPolicyCompactLeg(name: String): Seq[String] =
-      servingPolicyLeg(name, quantizedFamily, growthPlant, "compact")
+      servingPolicyLeg(name, Codec.Int8, growthPlant, "compact")
     // POLICY-DRIVEN MAINTENANCE, ADMISSION FAMILY: the same closed loop as
     // annpolicy for the dedup-at-the-door index — admissionHealth polled on
     // a cadence, acting ONLY when maintenanceDueAdmission fires, with the

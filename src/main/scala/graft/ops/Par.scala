@@ -140,7 +140,7 @@ private[graft] object Par {
     *     (pid, key) — every partition scans in parallel. */
   def exclusivePrefixBy(df: DataFrame, keyCol: String, order: Column,
       sums: Seq[(String, String)]): DataFrame =
-    exclusivePrefixByWithTotals(df, keyCol, order, sums)._1
+    prefixScanBy(df, keyCol, order, sums)._1
 
   /** [[exclusivePrefixBy]], also returning each key's GRAND TOTAL per
     * summed column — read from the same bounded per-(partition, key)
@@ -149,8 +149,21 @@ private[graft] object Par {
     * totals, the layout audit's row count) stop running a separate
     * aggregate job + broadcast exchange over the scanned relation. The
     * totals are exact by construction: they sum the identical partial
-    * sums the offsets are built from. */
+    * sums the offsets are built from. `keyCol` must be integral; totals
+    * are keyed by its value as a Long, so `totals(0)` finds key 0 whether
+    * the column is INT or BIGINT. */
   def exclusivePrefixByWithTotals(df: DataFrame, keyCol: String, order: Column,
+      sums: Seq[(String, String)]): (DataFrame, Map[Long, Seq[Long]]) = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(df.schema(keyCol).dataType),
+      s"exclusivePrefixBy totals key $keyCol must be integral, got ${df.schema(keyCol).dataType}")
+    val (scanned, totals) = prefixScanBy(df, keyCol, order, sums)
+    (scanned, totals.map { case (key, t) => key.asInstanceOf[Number].longValue -> t })
+  }
+
+  /** The keyed scan behind both entry points; totals keyed by the
+    * collected (boxed) key value. */
+  private def prefixScanBy(df: DataFrame, keyCol: String, order: Column,
       sums: Seq[(String, String)]): (DataFrame, Map[Any, Seq[Long]]) = {
     import org.apache.spark.sql.expressions.Window
     require(sums.nonEmpty)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.streaming.AnnStreams
+import graft.streaming.AnnStreams.{Codec, ServingIndex}
 import graft.ops.{Curation, Dedup, Itemsets, Multimodal, Similarity, Stats, TextAnalysis}
 
 /** Training-data-pipeline extension operators (build brief: dedup, similarity
@@ -5891,7 +5893,8 @@ object Extensions {
     * [[graft.streaming.AnnStreams.annServeBatch]], the IDENTICAL plan the
     * streaming operator runs per micro-batch (persisted bucketed IVF cells,
     * map-side nprobe centroid ranking, stream-static join, collect_list
-    * top-k). The index uses the SEEDED quantizer (`trained = false`: the
+    * top-k) — over float cells, or (x203) over int8 cells with the exact
+    * re-rank. The index uses the SEEDED quantizer (`trained = false`: the
     * nlist lowest-id corpus vectors verbatim), so the oracle replays EVERY
     * number in plain SQL — centroid ranking, cell assignment (ties toward
     * the lowest centroid id, both engines), cosine scores, (score DESC, id)
@@ -5924,21 +5927,23 @@ object Extensions {
       m.getOrElseUpdate(dir, build)
     }
   }
-  private val x201Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.ServingIndex]
-  def x201AnnServeTwin(s: SparkSession, dir: String): DataFrame = {
+  private val x201Indexes = new SessionIndexCache[ServingIndex]
+  def x201AnnServeTwin(s: SparkSession, dir: String): DataFrame =
+    annServeTwin(s, dir, x201Indexes, "x201idx", Codec.Float)
+  /** The x201/x203 body: index the 80% stripe, serve the 20% arrivals. */
+  private def annServeTwin(s: SparkSession, dir: String,
+      cache: SessionIndexCache[ServingIndex], idxPrefix: String, codec: Codec): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val idx = x201Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x201idx")
-      graft.streaming.AnnStreams.buildServingIndex(
-        e.filter($"vec_id" % 10 < 8), "vec_id", "embedding", idxDir,
-        nlist = 8, trained = false)
+    val idx = cache.getOrBuild(s, dir) {
+      AnnStreams.buildServingIndex(
+        e.filter($"vec_id" % 10 < 8), "vec_id", "embedding",
+        fixtureIndexDir(s, idxPrefix), nlist = 8, trained = false, codec = codec)
     }
     val arrivals = e.filter($"vec_id" % 10 >= 8)
       .select($"vec_id", timestamp_seconds($"vec_id" % 86400).as("ts"), $"embedding")
-    graft.streaming.AnnStreams.annServeBatch(
-      arrivals, idx, "vec_id", "ts", "embedding", k = 5, nprobe = 2)
+    AnnStreams.annServeBatch(
+      arrivals, idx, "vec_id", "ts", "embedding", k = 5, nprobe = 2, refine = 4)
       .select($"query_id", unix_timestamp($"ts").as("ts_s"),
         $"rank".cast("long").as("rank"), $"item_id", $"cos_sim")
       .orderBy($"query_id", $"rank".asc_nulls_last)
@@ -5999,29 +6004,34 @@ object Extensions {
     * duplicated a batch, or re-derived centroids breaks the hash. Seeded
     * quantizer (`trained = false` over the BASE slice) for the same
     * reason as x201: every number replays in plain SQL. */
-  private val x202Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.ServingIndex, graft.streaming.AnnStreams.ServingIndex)]
-  def x202CompactionTwin(s: SparkSession, dir: String): DataFrame = {
+  private val x202Indexes = new SessionIndexCache[(ServingIndex, ServingIndex)]
+  def x202CompactionTwin(s: SparkSession, dir: String): DataFrame =
+    blueGreenTwin(s, dir, x202Indexes, "x202idx", Codec.Float, AnnStreams.compactIndex)
+  /** The x202/x205/x206/x207 body: build over the 70% stripe, land the
+    * id-7 stripe through the real append path, roll blue→green with
+    * `act`, and serve the 20% arrivals through BOTH handles. `old`
+    * reopens AFTER the append landed (the visibility contract: handles
+    * bind the tail at open time); `new` is the green rollover. */
+  private def blueGreenTwin(s: SparkSession, dir: String,
+      cache: SessionIndexCache[(ServingIndex, ServingIndex)], idxPrefix: String, codec: Codec,
+      act: (SparkSession, String, String) => ServingIndex): DataFrame = {
     import s.implicits._
-    import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val (oldIdx, newIdx) = x202Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x202idx")
+    val (oldIdx, newIdx) = cache.getOrBuild(s, dir) {
+      val idxDir = fixtureIndexDir(s, idxPrefix)
       val built = AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
-        nlist = 8, trained = false)
+        nlist = 8, trained = false, codec = codec)
       AnnStreams.landAppendBatch(
         e.filter($"vec_id" % 10 === 7), built, "vec_id", "embedding", batchId = 0L)
-      // `old` reopens AFTER the append landed (the visibility contract:
-      // handles bind the tail at open time); `new` is the green rollover
       (AnnStreams.openServingIndex(s, s"$idxDir/blue"),
-        AnnStreams.compactIndex(s, s"$idxDir/blue", s"$idxDir/green"))
+        act(s, s"$idxDir/blue", s"$idxDir/green"))
     }
     val arrivals = e.filter($"vec_id" % 10 >= 8)
       .select($"vec_id", timestamp_seconds($"vec_id" % 86400).as("ts"), $"embedding")
-    def leg(idx: AnnStreams.ServingIndex, name: String): DataFrame =
+    def leg(idx: ServingIndex, name: String): DataFrame =
       AnnStreams.annServeBatch(arrivals, idx, "vec_id", "ts", "embedding",
-        k = 5, nprobe = 2)
+        k = 5, nprobe = 2, refine = 4)
         .select(lit(name).as("leg"), $"query_id",
           unix_timestamp($"ts").as("ts_s"),
           $"rank".cast("long").as("rank"), $"item_id", $"cos_sim")
@@ -6065,8 +6075,8 @@ object Extensions {
 
   // ------------------------------- x203 quantized-IVF serve twin (int8+re-rank)
   /** The QUANTIZED serving index oracled value-level (r15 verdict ask #5):
-    * the same corpus/arrival split and seeded quantizer as x201, served
-    * through [[graft.streaming.AnnStreams.annServeQuantizedBatch]] — probe
+    * the same corpus/arrival split and seeded quantizer as x201 (the same
+    * body), over an int8-coded index — probe
     * join over int8-coded cells (one byte per dimension; the asymmetric
     * `int8_cosine` distance), a k·refine shortlist through the k-bounded
     * heap aggregate, exact float re-rank of just the shortlist. The DuckDB
@@ -6078,25 +6088,9 @@ object Extensions {
     * quantized instead of float values all break the hash. Directly
     * comparable to x201: same queries, same index geometry, the only
     * difference is the int8 shortlist cut. */
-  private val x203Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.QuantizedIndex]
-  def x203QuantizedServe(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-    val idx = x203Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x203idx")
-      graft.streaming.AnnStreams.buildQuantizedIndex(
-        e.filter($"vec_id" % 10 < 8), "vec_id", "embedding", idxDir,
-        nlist = 8, trained = false)
-    }
-    val arrivals = e.filter($"vec_id" % 10 >= 8)
-      .select($"vec_id", timestamp_seconds($"vec_id" % 86400).as("ts"), $"embedding")
-    graft.streaming.AnnStreams.annServeQuantizedBatch(
-      arrivals, idx, "vec_id", "ts", "embedding", k = 5, nprobe = 2, refine = 4)
-      .select($"query_id", unix_timestamp($"ts").as("ts_s"),
-        $"rank".cast("long").as("rank"), $"item_id", $"cos_sim")
-      .orderBy($"query_id", $"rank".asc_nulls_last)
-  }
+  private val x203Indexes = new SessionIndexCache[ServingIndex]
+  def x203QuantizedServe(s: SparkSession, dir: String): DataFrame =
+    annServeTwin(s, dir, x203Indexes, "x203idx", Codec.Int8)
   val x203Sql: String =
     s"""WITH corpus AS (
       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 < 8),
@@ -6146,10 +6140,10 @@ object Extensions {
 
   // --------------------------- x205 quantized append/compaction twin (int8)
   /** x202's compaction-equivalence discipline applied to the QUANTIZED
-    * family: build the int8 index over 70% of the corpus, land a 10%
-    * slice through the REAL lockstep landing path
-    * ([[graft.streaming.AnnStreams.landQuantizedAppendBatch]] — codes AND
-    * float vectors, the exact foreachBatch body), compact blue→green, and
+    * codec (x202's body): build the int8 index over 70% of the corpus,
+    * land a 10% slice through the REAL lockstep landing path
+    * ([[graft.streaming.AnnStreams.landAppendBatch]] — codes AND float
+    * vectors, the exact foreachBatch body), compact blue→green, and
     * serve the same arrivals through BOTH handles. What this pins beyond
     * x202/x203: the appended slice is quantized at APPEND time with the
     * same closed form the base was, the shortlist sees base and tail as
@@ -6157,33 +6151,9 @@ object Extensions {
     * the tail float table — a tail landed without its floats, a branch
     * dropped, or a compaction that re-quantized would all break the hash
     * against the one-corpus DuckDB replay. */
-  private val x205Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.QuantizedIndex, graft.streaming.AnnStreams.QuantizedIndex)]
-  def x205QuantizedAppendTwin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.AnnStreams
-    val e = emb(s, dir)
-    val (oldIdx, newIdx) = x205Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x205idx")
-      val built = AnnStreams.buildQuantizedIndex(
-        e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
-        nlist = 8, trained = false)
-      AnnStreams.landQuantizedAppendBatch(
-        e.filter($"vec_id" % 10 === 7), built, "vec_id", "embedding", batchId = 0L)
-      (AnnStreams.openQuantizedIndex(s, s"$idxDir/blue"),
-        AnnStreams.compactQuantizedIndex(s, s"$idxDir/blue", s"$idxDir/green"))
-    }
-    val arrivals = e.filter($"vec_id" % 10 >= 8)
-      .select($"vec_id", timestamp_seconds($"vec_id" % 86400).as("ts"), $"embedding")
-    def leg(idx: AnnStreams.QuantizedIndex, name: String): DataFrame =
-      AnnStreams.annServeQuantizedBatch(arrivals, idx, "vec_id", "ts", "embedding",
-        k = 5, nprobe = 2, refine = 4)
-        .select(lit(name).as("leg"), $"query_id",
-          unix_timestamp($"ts").as("ts_s"),
-          $"rank".cast("long").as("rank"), $"item_id", $"cos_sim")
-    leg(oldIdx, "old").unionByName(leg(newIdx, "new"))
-      .orderBy($"leg", $"query_id", $"rank".asc_nulls_last)
-  }
+  private val x205Indexes = new SessionIndexCache[(ServingIndex, ServingIndex)]
+  def x205QuantizedAppendTwin(s: SparkSession, dir: String): DataFrame =
+    blueGreenTwin(s, dir, x205Indexes, "x205idx", Codec.Int8, AnnStreams.compactIndex)
   val x205Sql: String =
     s"""WITH corpus AS (
       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 < 8),
@@ -6247,33 +6217,11 @@ object Extensions {
     * stripe enters the quantizer). A retrain that carried centroids over,
     * lost or duplicated a vector while folding the tail, or derived the
     * new quantizer from anything but the combined corpus breaks the hash. */
-  private val x206Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.ServingIndex, graft.streaming.AnnStreams.ServingIndex)]
-  def x206RetrainTwin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.AnnStreams
-    val e = emb(s, dir)
-    val (oldIdx, newIdx) = x206Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x206idx")
-      val built = AnnStreams.buildServingIndex(
-        e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
-        nlist = 8, trained = false)
-      AnnStreams.landAppendBatch(
-        e.filter($"vec_id" % 10 === 7), built, "vec_id", "embedding", batchId = 0L)
-      (AnnStreams.openServingIndex(s, s"$idxDir/blue"),
-        AnnStreams.retrainIndex(s, s"$idxDir/blue", s"$idxDir/green", trained = false))
-    }
-    val arrivals = e.filter($"vec_id" % 10 >= 8)
-      .select($"vec_id", timestamp_seconds($"vec_id" % 86400).as("ts"), $"embedding")
-    def leg(idx: AnnStreams.ServingIndex, name: String): DataFrame =
-      AnnStreams.annServeBatch(arrivals, idx, "vec_id", "ts", "embedding",
-        k = 5, nprobe = 2)
-        .select(lit(name).as("leg"), $"query_id",
-          unix_timestamp($"ts").as("ts_s"),
-          $"rank".cast("long").as("rank"), $"item_id", $"cos_sim")
-    leg(oldIdx, "old").unionByName(leg(newIdx, "new"))
-      .orderBy($"leg", $"query_id", $"rank".asc_nulls_last)
-  }
+  private val x206Indexes = new SessionIndexCache[(ServingIndex, ServingIndex)]
+  def x206RetrainTwin(s: SparkSession, dir: String): DataFrame =
+    blueGreenTwin(s, dir, x206Indexes, "x206idx", Codec.Float, retrainSeeded)
+  private def retrainSeeded(s: SparkSession, blue: String, green: String): ServingIndex =
+    AnnStreams.retrainIndex(s, blue, green, trained = false)
   /** One serve leg of the x206/x207 replays: assignment + probes + hits
     * under the given centroid CTE. Shared so the old/new legs cannot
     * drift in spelling — only the quantizer differs. */
@@ -6321,8 +6269,7 @@ object Extensions {
       |ORDER BY leg, query_id, rank""".stripMargin
 
   // ----------------------------------- x207 quantizer-retrain twin (int8)
-  /** x206's retrain discipline for the QUANTIZED family
-    * ([[graft.streaming.AnnStreams.retrainQuantizedIndex]]): lockstep
+  /** x206's retrain discipline (and body) for the int8 codec: lockstep
     * append, retrain blue→green, both legs served and replayed. The
     * codes CTE is deliberately SHARED between the legs — int8
     * quantization is per-vector and centroid-independent, so a retrain
@@ -6331,34 +6278,9 @@ object Extensions {
     * codes would serve a different shortlist and break the hash. Only the
     * quantizer (and therefore cell membership and the shortlist cut)
     * differs between the legs. */
-  private val x207Indexes = new SessionIndexCache[
-    (graft.streaming.AnnStreams.QuantizedIndex, graft.streaming.AnnStreams.QuantizedIndex)]
-  def x207QuantizedRetrainTwin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.AnnStreams
-    val e = emb(s, dir)
-    val (oldIdx, newIdx) = x207Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x207idx")
-      val built = AnnStreams.buildQuantizedIndex(
-        e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", s"$idxDir/blue",
-        nlist = 8, trained = false)
-      AnnStreams.landQuantizedAppendBatch(
-        e.filter($"vec_id" % 10 === 7), built, "vec_id", "embedding", batchId = 0L)
-      (AnnStreams.openQuantizedIndex(s, s"$idxDir/blue"),
-        AnnStreams.retrainQuantizedIndex(s, s"$idxDir/blue", s"$idxDir/green",
-          trained = false))
-    }
-    val arrivals = e.filter($"vec_id" % 10 >= 8)
-      .select($"vec_id", timestamp_seconds($"vec_id" % 86400).as("ts"), $"embedding")
-    def leg(idx: AnnStreams.QuantizedIndex, name: String): DataFrame =
-      AnnStreams.annServeQuantizedBatch(arrivals, idx, "vec_id", "ts", "embedding",
-        k = 5, nprobe = 2, refine = 4)
-        .select(lit(name).as("leg"), $"query_id",
-          unix_timestamp($"ts").as("ts_s"),
-          $"rank".cast("long").as("rank"), $"item_id", $"cos_sim")
-    leg(oldIdx, "old").unionByName(leg(newIdx, "new"))
-      .orderBy($"leg", $"query_id", $"rank".asc_nulls_last)
-  }
+  private val x207Indexes = new SessionIndexCache[(ServingIndex, ServingIndex)]
+  def x207QuantizedRetrainTwin(s: SparkSession, dir: String): DataFrame =
+    blueGreenTwin(s, dir, x207Indexes, "x207idx", Codec.Int8, retrainSeeded)
   /** One quantized serve leg (shortlist through the shared codes, exact
     * re-rank) under the given centroid CTE — x207's per-leg replay. */
   private def retrainQLegSql(c: String): String =
@@ -6428,17 +6350,19 @@ object Extensions {
     * seeded closed form and aggregates with the same integer arithmetic —
     * a wrong assignment, a tail health read off the wrong branch, or a
     * share computed against the wrong denominator all break the hash. */
-  private val x208Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.ServingIndex]
-  def x208IndexHealth(s: SparkSession, dir: String): DataFrame = {
+  private val x208Indexes = new SessionIndexCache[ServingIndex]
+  def x208IndexHealth(s: SparkSession, dir: String): DataFrame =
+    healthTwin(s, dir, x208Indexes, "x208idx", Codec.Float)
+  /** The x208/x209 body: the 70% base with the id-7 stripe as its tail. */
+  private def healthTwin(s: SparkSession, dir: String,
+      cache: SessionIndexCache[ServingIndex], idxPrefix: String, codec: Codec): DataFrame = {
     import s.implicits._
-    import graft.streaming.AnnStreams
     val e = emb(s, dir)
-    val idx = x208Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x208idx")
+    val idx = cache.getOrBuild(s, dir) {
+      val idxDir = fixtureIndexDir(s, idxPrefix)
       val built = AnnStreams.buildServingIndex(
         e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", idxDir,
-        nlist = 8, trained = false)
+        nlist = 8, trained = false, codec = codec)
       AnnStreams.landAppendBatch(
         e.filter($"vec_id" % 10 === 7), built, "vec_id", "embedding", batchId = 0L)
       AnnStreams.openServingIndex(s, idxDir)
@@ -6474,8 +6398,9 @@ object Extensions {
       |FROM cells GROUP BY leg ORDER BY leg""".stripMargin
 
   // ------------------------------- x209 quantized index health (int8 metric)
-  /** [[graft.streaming.AnnStreams.quantizedIndexHealth]] oracled: the x208
-    * health report for the byte-coded family, where the assignment-quality
+  /** [[graft.streaming.AnnStreams.indexHealth]] over an int8 index
+    * oracled (x208's body): the health report for byte-coded cells, where
+    * the assignment-quality
     * signal is the asymmetric `int8_cosine(own centroid, code)` — the
     * SAME metric the probe serves with. The replay recomputes the codes
     * from the quantization closed form (x203's discipline) and the cosine
@@ -6484,23 +6409,9 @@ object Extensions {
     * through the wrong scale rule, measured fitness under a different
     * metric than the serve path, or read the wrong branch breaks the
     * hash. */
-  private val x209Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.QuantizedIndex]
-  def x209QuantizedHealth(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.AnnStreams
-    val e = emb(s, dir)
-    val idx = x209Indexes.getOrBuild(s, dir) {
-      val idxDir = fixtureIndexDir(s, "x209idx")
-      val built = AnnStreams.buildQuantizedIndex(
-        e.filter($"vec_id" % 10 < 7), "vec_id", "embedding", idxDir,
-        nlist = 8, trained = false)
-      AnnStreams.landQuantizedAppendBatch(
-        e.filter($"vec_id" % 10 === 7), built, "vec_id", "embedding", batchId = 0L)
-      AnnStreams.openQuantizedIndex(s, idxDir)
-    }
-    AnnStreams.quantizedIndexHealth(idx)
-  }
+  private val x209Indexes = new SessionIndexCache[ServingIndex]
+  def x209QuantizedHealth(s: SparkSession, dir: String): DataFrame =
+    healthTwin(s, dir, x209Indexes, "x209idx", Codec.Int8)
   val x209Sql: String =
     s"""WITH corpus AS (
       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 < 7),
@@ -6696,8 +6607,7 @@ object Extensions {
     * correctly rounded in both engines). A health read off the wrong
     * branch, a drifted threshold constant, truncate-vs-floor drift, or a
     * mis-clamped geometry all break the hash. */
-  private val x211Indexes =
-    new SessionIndexCache[graft.streaming.AnnStreams.ServingIndex]
+  private val x211Indexes = new SessionIndexCache[ServingIndex]
   def x211MaintenancePlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.AnnStreams

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
-import graft.functions.Exprs.cosine_sim
+import graft.functions.Exprs.{cosine_sim, int8_cosine, int8_quantize}
 
 /** Streaming ANN SERVING — the similarity-search twin of
   * [[DedupStreams.nearDupAdmission]]: as query embeddings ARRIVE, answer
@@ -13,20 +13,27 @@ import graft.functions.Exprs.cosine_sim
   * The retrieval-serving shape made continuous: the lake is indexed once,
   * arrivals pay only their own probe.
   *
-  * Scale design mirrors the admission index (r14 verdict → r15): the index
-  * lives ON DISK, not pinned in executors. [[buildServingIndex]] spends the
-  * one corpus pass a static index always costs and persists under `dir`:
+  * ONE index structure over a pluggable CELL CODEC (REPOSE's shape: one
+  * partition-local index with pluggable pruning, not one index per vector
+  * representation). Scale design mirrors the admission index (r14 verdict
+  * → r15): the index lives ON DISK, not pinned in executors.
+  * [[buildServingIndex]] spends the one corpus pass a static index always
+  * costs and persists under `dir`:
   *
-  *  - `cells/` — the IVF cell assignment `(centroid_id, item_id, item_vec)`
+  *  - `cells/` — the IVF cell assignment `(centroid_id, item_id, payload)`
   *    as a parquet table BUCKETED AND SORTED ON `centroid_id` (one bucket
   *    per cell): the stream-static join's static side arrives
   *    pre-partitioned, so a micro-batch shuffles only its own exploded
   *    probes — the corpus never moves, and a lost executor re-reads its
-  *    buckets from disk.
+  *    buckets from disk. The payload is the [[Codec]]'s: `item_vec`
+  *    (float32, exact cosines) or `code` (int8, one byte per dimension).
+  *  - `vecs/` — int8 only: `(item_id, item_vec)` bucketed on `item_id`,
+  *    the exact re-rank side (see [[Codec.Int8]]).
   *  - `centroids/` + `meta/` — the (tiny, nlist-sized) coarse quantizer and
-  *    the index parameters. [[openServingIndex]] rebuilds the probe
-  *    expression from these after a driver bounce — restart never re-scans
-  *    the corpus.
+  *    the index parameters, the codec among them. [[openServingIndex]]
+  *    rebuilds the probe expression from these after a driver bounce —
+  *    restart never re-scans the corpus — and every maintenance verb reads
+  *    the codec from here, so none takes one.
   *
   * Per micro-batch the STREAM side is pure map-side (nearest-`nprobe`
   * centroid ranking is a literal-array expression — no join, no shuffle;
@@ -35,10 +42,11 @@ import graft.functions.Exprs.cosine_sim
   * aggregation: per-(query, ts) top-k through the k-BOUNDED
   * [[graft.functions.TopKAgg]] heap aggregate — state is k entries per
   * in-flight query (never the candidate volume, never the corpus), and the
-  * watermark bounds how many queries are in flight. Corpus item ids are
-  * assumed unique (each vector lives in exactly ONE cell — IVF assignment
-  * is a partition), so no dedup pass is needed between the join and the
-  * top-k.
+  * watermark bounds how many queries are in flight. An inexact codec adds
+  * a k·`refine` shortlist heap and an exact re-rank before it. Corpus item
+  * ids are assumed unique (each vector lives in exactly ONE cell — IVF
+  * assignment is a partition), so no dedup pass is needed between the
+  * join and the top-k.
   *
   * Centroids: `trained = true` (default) trains the standard driver-local
   * Lloyd loop on a deterministic xxhash64 sample
@@ -46,8 +54,8 @@ import graft.functions.Exprs.cosine_sim
   * behavior quantified by x188); `trained = false` uses the `nlist`
   * lowest-id corpus vectors VERBATIM as the quantizer — a seeded mode
   * whose every number is replayable in plain SQL (no float drift from
-  * k-means means), which is what lets the batch twin carry a full
-  * value-level DuckDB oracle (x201) over the exact serve path: probe
+  * k-means means), which is what lets the batch twins carry a full
+  * value-level DuckDB oracle (x201/x203) over the exact serve path: probe
   * ranking, cell membership, cosine scores, ranks.
   */
 object AnnStreams {
@@ -55,28 +63,85 @@ object AnnStreams {
   /** One arriving query vector — the typed stream row for tests and callers. */
   case class Arrival(query_id: Long, ts: java.sql.Timestamp, embedding: Seq[Float])
 
+  /** What a cell stores per vector and how a float query scores against
+    * it. Chosen once at build and written into `meta/`. `exact`: served
+    * scores are the cell scores themselves (one top-k pass); otherwise
+    * they come from an exact re-rank of a k·refine shortlist. */
+  sealed abstract class Codec(val name: String, val payload: String,
+      val exact: Boolean) {
+    def encode(vec: Column): Column
+    def score(query: Column, payload: Column): Column
+  }
+  object Codec {
+    /** float32 cells: `item_vec`, scored by exact `cosine_sim`. */
+    case object Float extends Codec("float", "item_vec", exact = true) {
+      def encode(vec: Column): Column = vec
+      def score(query: Column, payload: Column): Column = cosine_sim(query, payload)
+    }
+    /** int8 cells (r15 verdict ask #5 — the next 100 TB axis for ANN
+      * serving): `code` BINARY at ONE BYTE per dimension (4× fewer scan
+      * bytes than float32 cells — measured ~3.9× on-disk at sf0.1; the
+      * per-vector scale is not even stored, because cosine is
+      * scale-invariant), ranked by the asymmetric `int8_cosine(query_float,
+      * code)`. Quantization only coarsens the SHORTLIST cut: served scores
+      * are full-precision re-ranks against `vecs/`, so with `refine` ≥
+      * cell population the results equal the float index exactly (spec'd),
+      * and the nprobe/refine recall trade-off is quantified by the
+      * ScaleStress `pq` leg. */
+    case object Int8 extends Codec("int8", "code", exact = false) {
+      def encode(vec: Column): Column = int8_quantize(vec).as("code")
+      def score(query: Column, payload: Column): Column = int8_cosine(query, payload)
+    }
+    def apply(name: String): Codec = Seq(Float, Int8).find(_.name == name)
+      .getOrElse(throw new IllegalArgumentException(s"unknown cell codec '$name'"))
+  }
+
   /** Handle over a built-or-opened on-disk serving index. `cells` is a
     * catalog-backed bucketed table (shuffle-free static join side);
     * `centroids` is the nlist-sized quantizer the probe expression bakes
     * in as literals; `appends` is the (possibly empty) tail of
     * [[appendStream]]-ingested vectors not yet folded into the bucketed
-    * base — see the maintenance contract on [[appendStream]]. */
+    * base — see the maintenance contract on [[appendStream]]. `vecs` is
+    * the exact re-rank table of an inexact codec (None for float). */
   final case class ServingIndex(
       dir: String, nlist: Int, buckets: Int,
       centroids: Array[(Int, Array[Float])], cells: DataFrame,
-      appends: DataFrame)
+      appends: DataFrame, codec: Codec, vecs: Option[Vecs])
+
+  /** `(item_id, item_vec)` bucketed on `item_id` plus its append tail,
+    * landed in LOCKSTEP with the cells tail (codes without floats would
+    * shortlist but never re-rank). Joined as separate branches so the
+    * bucketed base keeps its pre-partitioning. */
+  final case class Vecs(base: DataFrame, appends: DataFrame)
 
   /** Location-derived catalog name (shared rule: [[DiskIndex.tableName]]). */
-  private def tableName(spark: SparkSession, dir: String): String =
-    DiskIndex.tableName(spark, "graft_ann_cells", dir)
+  private def tableName(spark: SparkSession, dir: String, kind: String): String =
+    DiskIndex.tableName(spark, s"graft_ann_$kind", dir)
+
+  /** Every append root an index may carry — cleared together, so a
+    * location reused across codecs never resurrects a stale tail. */
+  private def tailRoots(dir: String): Seq[String] =
+    Seq(s"$dir/appends", s"$dir/appends_vecs")
+
+  /** `df` as the `kind` table under `dir`, one bucket per cell, sorted on
+    * the bucket key: the probe (or re-rank) join's static side is
+    * pre-partitioned by exactly the key it is joined on. */
+  private def writeBucketed(df: DataFrame, key: String, buckets: Int,
+      dir: String, kind: String): Unit =
+    df.repartition(buckets, col(key))
+      .write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, key).sortBy(key)
+      .option("path", s"$dir/$kind")
+      .saveAsTable(tableName(df.sparkSession, dir, kind))
 
   /** Index a static corpus for serving: ONE corpus pass (train/seed the
-    * quantizer, assign every vector map-side, write bucketed), persisted
-    * under `dir`. Returns the live handle. */
+    * quantizer, assign every vector map-side, encode, write bucketed —
+    * plus the `item_id`-bucketed float table an inexact codec re-ranks
+    * against), persisted under `dir`. Returns the live handle. */
   def buildServingIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nlist: Int = 16, trained: Boolean = true,
       iters: Int = 3, trainSample: Int = 4096,
-      spreadSeeds: Boolean = false): ServingIndex = {
+      spreadSeeds: Boolean = false, codec: Codec = Codec.Float): ServingIndex = {
     require(!corpus.isStreaming, "corpus must be a static relation (the indexed lake)")
     require(nlist >= 1, s"nlist must be positive, got $nlist")
     val spark = corpus.sparkSession
@@ -86,46 +151,50 @@ object AnnStreams {
     // range) far from the actual cause — quantizerOf fails loudly instead
     val centroids = quantizerOf(corpus, idCol, vecCol, nlist, trained, iters,
       trainSample, spreadSeeds)
-    // one bucket per cell: the probe join's static side is pre-partitioned
-    // by exactly the key it is probed on
-    Similarity.assignCells(corpus.select(col(idCol).cast("long").as(idCol),
-        col(vecCol)), centroids, idCol, vecCol)
-      .select(col("centroid_id"), col("item_id"), col("item_vec"))
-      .repartition(nlist, col("centroid_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nlist, "centroid_id").sortBy("centroid_id")
-      .option("path", s"$dir/cells")
-      .saveAsTable(tableName(spark, dir))
+    val vecs = corpus.select(col(idCol).cast("long").as(idCol), col(vecCol))
+    writeBucketed(Similarity.assignCells(vecs, centroids, idCol, vecCol)
+        .select(col("centroid_id"), col("item_id"), codec.encode(col("item_vec"))),
+      "centroid_id", nlist, dir, "cells")
+    if (!codec.exact)
+      writeBucketed(vecs.select(col(idCol).as("item_id"), col(vecCol).as("item_vec")),
+        "item_id", nlist, dir, "vecs")
     centroids.toSeq.map { case (cid, v) => (cid, v.toSeq) }
       .toDF("centroid_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    Seq((nlist, centroids.length)).toDF("nlist", "n_centroids")
+    Seq((nlist, centroids.length, codec.name)).toDF("nlist", "n_centroids", "codec")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
     // a rebuild into a previously-used location must not resurrect a tail
     // assigned under the OLD centroids (DiskIndex.clearAppendTails doc)
-    DiskIndex.clearAppendTails(spark, Seq(s"$dir/appends"))
-    ServingIndex(dir, nlist, nlist, centroids, spark.table(tableName(spark, dir)),
-      appendsOf(spark, dir))
+    DiskIndex.clearAppendTails(spark, tailRoots(dir))
+    bind(spark, dir, nlist, centroids, codec)
   }
 
-  /** The append tail under `dir/appends/batch=<id>/` — empty (with the
-    * cells schema) when no [[appendStream]] batch has landed yet. */
-  private def appendsOf(spark: SparkSession, dir: String): DataFrame =
-    DiskIndex.appendTail(spark, s"$dir/appends",
-      spark.table(tableName(spark, dir)).schema)
+  /** The live handle over the tables under `dir`: registers the bucketed
+    * tables if the catalog lost them (a driver bounce) and binds the
+    * append tails as of now. No corpus work. */
+  private def bind(spark: SparkSession, dir: String, nlist: Int,
+      centroids: Array[(Int, Array[Float])], codec: Codec): ServingIndex = {
+    def table(kind: String, key: String): DataFrame =
+      DiskIndex.registerBucketed(spark, tableName(spark, dir, kind), s"$dir/$kind", key, nlist)
+    val cells = table("cells", "centroid_id")
+    val vecs = if (codec.exact) None else {
+      val v = table("vecs", "item_id")
+      Some(Vecs(v, DiskIndex.appendTail(spark, s"$dir/appends_vecs", v.schema)))
+    }
+    ServingIndex(dir, nlist, nlist, centroids, cells,
+      DiskIndex.appendTail(spark, s"$dir/appends", cells.schema), codec, vecs)
+  }
 
-  /** Reopen a persisted serving index after a driver bounce: re-register
-    * the bucketed cells table over the existing files and reload the
-    * nlist-sized quantizer. No corpus work. */
+  /** Reopen a persisted serving index after a driver bounce: read the
+    * parameters and codec from `meta/`, reload the nlist-sized quantizer,
+    * re-register the bucketed tables over the existing files. */
   def openServingIndex(spark: SparkSession, dir: String): ServingIndex = {
-    val nlist = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    val cells = DiskIndex.registerBucketed(
-      spark, tableName(spark, dir), s"$dir/cells", "centroid_id", nlist)
+    val meta = spark.read.parquet(s"$dir/meta").head()
     val centroids = spark.read.parquet(s"$dir/centroids")
       .orderBy(col("centroid_id"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-    ServingIndex(dir, nlist, nlist, centroids, cells, appendsOf(spark, dir))
+    bind(spark, dir, meta.getInt(0), centroids, Codec(meta.getAs[String]("codec")))
   }
 
   /** Streaming index MAINTENANCE — the write path of a living vector lake:
@@ -171,16 +240,23 @@ object AnnStreams {
     * [[appendStream]]'s foreachBatch, exposed so batch callers (a backfill
     * job, the x202 compaction twin) ride the IDENTICAL landing path the
     * stream does: map-side cell assignment against the index's FIXED
-    * centroids, written idempotently under `batch=<batchId>` (re-landing a
-    * batchId replaces its own output). */
+    * centroids, encoded by the index's codec, written idempotently under
+    * `batch=<batchId>` (re-landing a batchId replaces its own output). An
+    * inexact codec also lands the floats under `appends_vecs/`, FIRST: a
+    * handle opened between the two writes then misses the new items
+    * rather than shortlisting codes it cannot re-rank. */
   def landAppendBatch(batch: DataFrame, index: ServingIndex,
-      idCol: String, vecCol: String, batchId: Long): Unit =
-    Similarity.assignCells(
-      batch.select(col(idCol).cast("long").as(idCol), col(vecCol)),
-      index.centroids, idCol, vecCol)
-      .select(col("centroid_id"), col("item_id"), col("item_vec"))
+      idCol: String, vecCol: String, batchId: Long): Unit = {
+    val b = batch.select(col(idCol).cast("long").as(idCol), col(vecCol))
+    if (index.vecs.isDefined)
+      b.select(col(idCol).as("item_id"), col(vecCol).as("item_vec"))
+        .write.mode("overwrite")
+        .parquet(s"${index.dir}/appends_vecs/batch=$batchId")
+    Similarity.assignCells(b, index.centroids, idCol, vecCol)
+      .select(col("centroid_id"), col("item_id"), index.codec.encode(col("item_vec")))
       .write.mode("overwrite")
       .parquet(s"${index.dir}/appends/batch=$batchId")
+  }
 
   /** Fold the append tail into a fresh bucketed base at `newDir` — the
     * scheduled maintenance step, blue/green rather than in-place: Spark
@@ -188,27 +264,26 @@ object AnnStreams {
     * union cannot be pinned in memory to break the cycle, so compaction
     * rolls the index FORWARD (old dir stays readable until the caller
     * drops it; serve handles opened on `newDir` see one bucketed base and
-    * an empty tail). Centroids are carried over VERBATIM — compaction
-    * reorganizes storage, it never moves a vector between cells — so
-    * results are identical by construction (spec'd). */
+    * an empty tail). Centroids, codes and the codec are carried over
+    * VERBATIM — compaction reorganizes storage, it never moves a vector
+    * between cells or re-quantizes one — so results are identical by
+    * construction (spec'd). */
   def compactIndex(spark: SparkSession, dir: String, newDir: String): ServingIndex = {
     require(DiskIndex.qualifiedUri(spark, dir) !=
       DiskIndex.qualifiedUri(spark, newDir),
       "compaction is blue/green: newDir must differ from dir")
     val old = openServingIndex(spark, dir)
-    old.cells.unionByName(old.appends)
-      .repartition(old.nlist, col("centroid_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(old.nlist, "centroid_id").sortBy("centroid_id")
-      .option("path", s"$newDir/cells")
-      .saveAsTable(tableName(spark, newDir))
-    spark.read.parquet(s"$dir/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$newDir/centroids")
-    spark.read.parquet(s"$dir/meta")
-      .coalesce(1).write.mode("overwrite").parquet(s"$newDir/meta")
+    writeBucketed(old.cells.unionByName(old.appends), "centroid_id", old.nlist,
+      newDir, "cells")
+    old.vecs.foreach(v =>
+      writeBucketed(v.base.unionByName(v.appends), "item_id", old.nlist, newDir, "vecs"))
+    Seq("centroids", "meta").foreach { kind =>
+      spark.read.parquet(s"$dir/$kind")
+        .coalesce(1).write.mode("overwrite").parquet(s"$newDir/$kind")
+    }
     // newDir may have hosted an index before — clear any stale tail
-    DiskIndex.clearAppendTails(spark, Seq(s"$newDir/appends"))
-    openServingIndex(spark, newDir)
+    DiskIndex.clearAppendTails(spark, tailRoots(newDir))
+    bind(spark, newDir, old.nlist, old.centroids, old.codec)
   }
 
   /** RETRAIN the quantizer over the grown corpus and rebuild at `newDir` —
@@ -218,12 +293,16 @@ object AnnStreams {
     * BOUNDARIES to where the data now lives: it re-derives the quantizer
     * over base ∪ tail (the same trained-Lloyd / seeded discipline as
     * [[buildServingIndex]]), reassigns every vector map-side, and writes a
-    * fresh bucketed base — exactly what [[DedupStreams.reindexAdmission]]
-    * does for the admission family's hot order. Equivalent by construction
-    * (and by spec) to a fresh [[buildServingIndex]] over the combined
-    * corpus at the same parameters (including `spreadSeeds`):
-    * fold-then-build IS the implementation, so retrain can never drift
-    * from the build path.
+    * fresh bucketed base under the same codec — exactly what
+    * [[DedupStreams.reindexAdmission]] does for the admission family's
+    * hot order. Equivalent by construction (and by spec) to a fresh
+    * [[buildServingIndex]] over the combined corpus at the same parameters
+    * (including `spreadSeeds`): fold-then-build IS the implementation, so
+    * retrain can never drift from the build path. The rebuild reads the
+    * stored FLOATS, never int8 codes: codes are lossy, and a
+    * code→decode→re-encode rebuild would compound quantization error on
+    * every scheduled retrain (spec'd: retrained codes equal a fresh
+    * build's codes byte-for-byte).
     *
     * Cost model: one corpus pass (read cells + tail, one map-side
     * reassignment, one bucketed rewrite) plus the driver-local Lloyd over
@@ -243,7 +322,7 @@ object AnnStreams {
     * @param newNlist re-pick the cell count as the corpus grows (√N rule);
     *                 `0` (default) keeps the old index's nlist.
     * @param spreadSeeds trained-mode Lloyd seeding; defaults to TRUE here
-    *                 (unlike the builders) because retrain exists for the
+    *                 (unlike the builder) because retrain exists for the
     *                 drifted case: farthest-first seeding guarantees a
     *                 seed near every mode of the grown sample, where the
     *                 default lowest-id seeding can move at most one
@@ -260,9 +339,11 @@ object AnnStreams {
       "retrain is blue/green: newDir must differ from dir")
     val old = openServingIndex(spark, dir)
     val nlist = if (newNlist > 0) newNlist else old.nlist
-    buildServingIndex(
-      old.cells.unionByName(old.appends).select(col("item_id"), col("item_vec")),
-      "item_id", "item_vec", newDir, nlist, trained, iters, trainSample, spreadSeeds)
+    val floats = old.vecs.fold(old.cells.unionByName(old.appends))(v =>
+      v.base.unionByName(v.appends))
+    buildServingIndex(floats.select(col("item_id"), col("item_vec")),
+      "item_id", "item_vec", newDir, nlist, trained, iters, trainSample, spreadSeeds,
+      old.codec)
   }
 
   /** One-pass HEALTH report over a serving index — the observability the
@@ -274,40 +355,35 @@ object AnnStreams {
     *    by serve plans and accumulates one directory per maintenance
     *    batch, so it must stay a small fraction of the base — the
     *    COMPACTION trigger.
-    *  - `avg_assign_cos_ppm` — mean cosine between each stored vector and
-    *    its OWN cell centroid, floored to ppm (integer arithmetic —
-    *    exactly replayable). Tail vectors were assigned under the same
-    *    fixed centroids as the base, so arrivals that fit the quantizer
-    *    score ≈ the base; a DRIFTED tail scores materially lower (the
-    *    quantizer has no resolution where it lives) — the RETRAIN trigger.
+    *  - `avg_assign_cos_ppm` — mean score between each stored vector and
+    *    its OWN cell centroid under the codec's serve metric (exact cosine
+    *    for float, the asymmetric `int8_cosine(centroid, code)` for int8 —
+    *    health measures fitness under the distance the index actually
+    *    serves with), floored to ppm (integer arithmetic — exactly
+    *    replayable). Tail vectors were assigned under the same fixed
+    *    centroids as the base, so arrivals that fit the quantizer score ≈
+    *    the base; a DRIFTED tail scores materially lower (the quantizer has
+    *    no resolution where it lives) — the RETRAIN trigger.
     *  - `max_cell_share_ppm` — the hottest cell's share of the branch
     *    (the pruning-skew signal: drifted appends pile into few cells).
     *
     * Cost: one scan of cells + tail against the nlist-sized broadcast
     * centroid relation and two tiny aggregations — the stored
-    * `centroid_id` IS the assignment, no reassignment pass. Oracled
-    * value-level by x208. */
-  def indexHealth(index: ServingIndex): DataFrame =
-    healthReport(index.cells, index.appends, index.centroids,
-      cosine_sim(col("item_vec"), col("centroid")))
-
-  /** The ONE health pipeline both families ride (r17 review: the float and
-    * quantized reports feed the same [[maintenanceDue]] contract, so their
-    * ppm arithmetic must not be able to drift apart): per-branch broadcast
-    * join against the nlist-sized centroid relation, per-cell partial
-    * counts/sums, per-leg rollup. `assignCos` is the family's own serve
-    * metric over (`centroid`, the branch's payload columns). */
-  private def healthReport(base: DataFrame, tail: DataFrame,
-      centroids: Array[(Int, Array[Float])], assignCos: org.apache.spark.sql.Column): DataFrame = {
-    val spark = base.sparkSession
+    * `centroid_id` IS the assignment, no reassignment pass; the int8
+    * cells tail IS the append population (landed in lockstep), so no
+    * float scan either. Oracled value-level by x208 (float) and x209
+    * (int8). */
+  def indexHealth(index: ServingIndex): DataFrame = {
+    val spark = index.cells.sparkSession
     import spark.implicits._
-    val centDf = broadcast(centroids.toSeq
+    val centDf = broadcast(index.centroids.toSeq
       .map { case (cid, v) => (cid, v.toSeq) }.toDF("centroid_id", "centroid"))
+    val assignCos = index.codec.score(col("centroid"), col(index.codec.payload))
     def legOf(df: DataFrame, leg: String): DataFrame =
       df.join(centDf, Seq("centroid_id"))
         .select(lit(leg).as("leg"), col("centroid_id"),
           floor(assignCos * 1e6).cast("long").as("cos_ppm"))
-    legOf(base, "base").unionByName(legOf(tail, "tail"))
+    legOf(index.cells, "base").unionByName(legOf(index.appends, "tail"))
       .groupBy(col("leg"), col("centroid_id"))
       .agg(count(lit(1)).as("n"), sum(col("cos_ppm")).as("s"))
       .groupBy(col("leg"))
@@ -379,8 +455,8 @@ object AnnStreams {
     * corpus it builds over is base + tail rows; √N balances probe cost
     * (∝ N/nlist per probed cell) against centroid-scan cost (∝ nlist) —
     * the classical IVF operating point, and 4× growth re-cells at 2×.
-    * Works over [[indexHealth]] and [[quantizedIndexHealth]] alike (same
-    * schema). Clamped to [minNlist, maxNlist]; empty report → minNlist. */
+    * Works over either codec's [[indexHealth]] (same schema). Clamped to
+    * [minNlist, maxNlist]; empty report → minNlist. */
   def scheduledNlist(health: DataFrame, minNlist: Int = 1,
       maxNlist: Int = 1 << 16): Int = {
     require(minNlist >= 1 && maxNlist >= minNlist,
@@ -393,46 +469,9 @@ object AnnStreams {
       math.min(maxNlist.toLong, math.round(math.sqrt(n.toDouble)))).toInt
   }
 
-  // ------------------------------------------------- quantized serving index
-
-  /** Handle over an int8-quantized on-disk serving index (r15 verdict ask
-    * #5 — the next 100 TB axis for ANN serving). Two bucketed tables:
-    *
-    *  - `cellsq/` — `(centroid_id, item_id, code BINARY)` bucketed on
-    *    `centroid_id`: the HOT index the per-batch probe join scans, at
-    *    ONE BYTE per dimension (4× fewer scan bytes than float32 cells —
-    *    measured ~3.9× on-disk at sf0.1; the per-vector scale is not even
-    *    stored, because cosine is scale-invariant). Probing ranks by the
-    *    asymmetric distance `int8_cosine(query_float, code)`.
-    *  - `vecs/` — `(item_id, item_vec)` bucketed on `item_id`: the exact
-    *    re-rank side. Only the `k·refine` shortlisted rows per query join
-    *    it, repartitioned on the bucket key — the corpus side never
-    *    shuffles.
-    *
-    * Recall: quantization only coarsens the SHORTLIST cut; the served
-    * scores are full-precision re-ranks, so with `refine` ≥ cell
-    * population the results equal the float index exactly (spec'd), and
-    * the nprobe/refine recall trade-off is quantified by the ScaleStress
-    * `pq` leg.
-    *
-    * Maintenance parity with the other index families:
-    * `cellsQAppends`/`vecsAppends` are the [[appendQuantizedStream]]-
-    * ingested tails (landed in LOCKSTEP — codes without floats would
-    * shortlist but never re-rank), joined as separate branches so the
-    * bucketed bases keep their pre-partitioning;
-    * [[compactQuantizedIndex]] folds both tails blue/green. */
-  final case class QuantizedIndex(
-      dir: String, nlist: Int, centroids: Array[(Int, Array[Float])],
-      cellsQ: DataFrame, vecs: DataFrame,
-      cellsQAppends: DataFrame, vecsAppends: DataFrame)
-
-  private def qTableName(spark: SparkSession, dir: String, kind: String): String =
-    DiskIndex.tableName(spark, s"graft_annq_$kind", dir)
-
-  /** The quantizer half of [[buildServingIndex]], shared with
-    * [[buildQuantizedIndex]]: trained Lloyd centroids (production) or the
-    * nlist lowest-id corpus vectors verbatim (the SQL-replayable seeded
-    * mode the oracles ride). */
+  /** The quantizer half of [[buildServingIndex]]: trained Lloyd centroids
+    * (production) or the nlist lowest-id corpus vectors verbatim (the
+    * SQL-replayable seeded mode the oracles ride). */
   private def quantizerOf(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, trained: Boolean, iters: Int, trainSample: Int,
       spreadSeeds: Boolean): Array[(Int, Array[Float])] = {
@@ -447,307 +486,44 @@ object AnnStreams {
     centroids
   }
 
-  /** Index a static corpus for QUANTIZED serving: one corpus pass — train
-    * or seed the quantizer, assign every vector map-side, int8-encode into
-    * `cellsq/`, land the float vectors bucketed on `item_id` into `vecs/`
-    * for the exact re-rank. Persisted under `dir` with the same
-    * centroids/meta layout as [[buildServingIndex]]. */
-  def buildQuantizedIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nlist: Int = 16, trained: Boolean = true,
-      iters: Int = 3, trainSample: Int = 4096,
-      spreadSeeds: Boolean = false): QuantizedIndex = {
-    require(!corpus.isStreaming, "corpus must be a static relation (the indexed lake)")
-    require(nlist >= 1, s"nlist must be positive, got $nlist")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = quantizerOf(corpus, idCol, vecCol, nlist, trained, iters,
-      trainSample, spreadSeeds)
-    Similarity.assignCells(corpus.select(col(idCol).cast("long").as(idCol),
-        col(vecCol)), centroids, idCol, vecCol)
-      .select(col("centroid_id"), col("item_id"),
-        graft.functions.Exprs.int8_quantize(col("item_vec")).as("code"))
-      .repartition(nlist, col("centroid_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nlist, "centroid_id").sortBy("centroid_id")
-      .option("path", s"$dir/cellsq")
-      .saveAsTable(qTableName(spark, dir, "cellsq"))
-    corpus.select(col(idCol).cast("long").as("item_id"),
-        col(vecCol).as("item_vec"))
-      .repartition(nlist, col("item_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nlist, "item_id").sortBy("item_id")
-      .option("path", s"$dir/vecs")
-      .saveAsTable(qTableName(spark, dir, "vecs"))
-    centroids.toSeq.map { case (cid, v) => (cid, v.toSeq) }
-      .toDF("centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    Seq((nlist, centroids.length)).toDF("nlist", "n_centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    // same stale-tail guard as the float builder, for BOTH lockstep tails
-    DiskIndex.clearAppendTails(spark,
-      Seq(s"$dir/appends_cellsq", s"$dir/appends_vecs"))
-    val cellsQ = spark.table(qTableName(spark, dir, "cellsq"))
-    val vecs = spark.table(qTableName(spark, dir, "vecs"))
-    QuantizedIndex(dir, nlist, centroids, cellsQ, vecs,
-      DiskIndex.appendTail(spark, s"$dir/appends_cellsq", cellsQ.schema),
-      DiskIndex.appendTail(spark, s"$dir/appends_vecs", vecs.schema))
-  }
-
-  /** Reopen a persisted quantized index after a driver bounce — same
-    * discipline as [[openServingIndex]]: re-register the bucketed tables,
-    * reload the nlist-sized quantizer, no corpus work. */
-  def openQuantizedIndex(spark: SparkSession, dir: String): QuantizedIndex = {
-    val nlist = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    val cellsQ = DiskIndex.registerBucketed(
-      spark, qTableName(spark, dir, "cellsq"), s"$dir/cellsq", "centroid_id", nlist)
-    val vecs = DiskIndex.registerBucketed(
-      spark, qTableName(spark, dir, "vecs"), s"$dir/vecs", "item_id", nlist)
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("centroid_id"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-    QuantizedIndex(dir, nlist, centroids, cellsQ, vecs,
-      DiskIndex.appendTail(spark, s"$dir/appends_cellsq", cellsQ.schema),
-      DiskIndex.appendTail(spark, s"$dir/appends_vecs", vecs.schema))
-  }
-
-  /** Land ONE batch of new vectors into the quantized index's append tail
-    * — [[landAppendBatch]]'s discipline for the quantized family: map-side
-    * cell assignment against the FIXED centroids, int8 codes into
-    * `appends_cellsq/batch=<id>`, float vectors into
-    * `appends_vecs/batch=<id>` (the exact-re-rank side must grow in
-    * lockstep or appended items would shortlist but never re-rank).
-    * Idempotent per batchId. Handles opened AFTER the append see it —
-    * [[openQuantizedIndex]] binds both tails at open time. */
-  def landQuantizedAppendBatch(batch: DataFrame, index: QuantizedIndex,
-      idCol: String, vecCol: String, batchId: Long): Unit = {
-    val b = batch.select(col(idCol).cast("long").as(idCol), col(vecCol))
-    Similarity.assignCells(b, index.centroids, idCol, vecCol)
-      .select(col("centroid_id"), col("item_id"),
-        graft.functions.Exprs.int8_quantize(col("item_vec")).as("code"))
-      .write.mode("overwrite")
-      .parquet(s"${index.dir}/appends_cellsq/batch=$batchId")
-    b.select(col(idCol).cast("long").as("item_id"),
-        col(vecCol).as("item_vec"))
-      .write.mode("overwrite")
-      .parquet(s"${index.dir}/appends_vecs/batch=$batchId")
-  }
-
-  /** Streaming maintenance for the quantized index — the [[appendStream]]
-    * twin over [[landQuantizedAppendBatch]]. */
-  def appendQuantizedStream(arrivals: DataFrame, index: QuantizedIndex,
-      idCol: String, vecCol: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(arrivals.isStreaming, "appendQuantizedStream takes a streaming relation")
-    arrivals
-      .select(col(idCol).cast("long").as(idCol), col(vecCol))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landQuantizedAppendBatch(batch, index, idCol, vecCol, batchId)
-      }
-      .start()
-  }
-
-  /** Blue/green compaction for the quantized family: fold both append
-    * tails into fresh bucketed bases at `newDir`, centroids/meta verbatim
-    * — same contract as [[compactIndex]]. */
-  def compactQuantizedIndex(spark: SparkSession, dir: String,
-      newDir: String): QuantizedIndex = {
-    require(DiskIndex.qualifiedUri(spark, dir) !=
-      DiskIndex.qualifiedUri(spark, newDir),
-      "compaction is blue/green: newDir must differ from dir")
-    val old = openQuantizedIndex(spark, dir)
-    old.cellsQ.unionByName(old.cellsQAppends)
-      .repartition(old.nlist, col("centroid_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(old.nlist, "centroid_id").sortBy("centroid_id")
-      .option("path", s"$newDir/cellsq")
-      .saveAsTable(qTableName(spark, newDir, "cellsq"))
-    old.vecs.unionByName(old.vecsAppends)
-      .repartition(old.nlist, col("item_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(old.nlist, "item_id").sortBy("item_id")
-      .option("path", s"$newDir/vecs")
-      .saveAsTable(qTableName(spark, newDir, "vecs"))
-    Seq("centroids", "meta").foreach { kind =>
-      spark.read.parquet(s"$dir/$kind")
-        .coalesce(1).write.mode("overwrite").parquet(s"$newDir/$kind")
-    }
-    // newDir may have hosted an index before — clear any stale tails
-    DiskIndex.clearAppendTails(spark,
-      Seq(s"$newDir/appends_cellsq", s"$newDir/appends_vecs"))
-    openQuantizedIndex(spark, newDir)
-  }
-
-  /** [[retrainIndex]] for the quantized family: re-derive the quantizer
-    * over base ∪ tail, reassign, re-encode, rebuild both bucketed tables
-    * at `newDir` blue/green. The retrain reads the stored FLOATS
-    * (`vecs/` ∪ its tail) and re-quantizes them — never the int8 codes:
-    * codes are lossy, and a code→decode→re-encode rebuild would compound
-    * quantization error on every scheduled retrain (spec'd: retrained
-    * codes equal a fresh build's codes byte-for-byte). Same cost model,
-    * blue/green contract, fold-then-build equivalence, and drift-mode
-    * `spreadSeeds = true` default as [[retrainIndex]]; `newNlist` re-picks
-    * the cell count (0 keeps). */
-  def retrainQuantizedIndex(spark: SparkSession, dir: String, newDir: String,
-      trained: Boolean = true, iters: Int = 3, trainSample: Int = 4096,
-      newNlist: Int = 0, spreadSeeds: Boolean = true): QuantizedIndex = {
-    require(DiskIndex.qualifiedUri(spark, dir) !=
-      DiskIndex.qualifiedUri(spark, newDir),
-      "retrain is blue/green: newDir must differ from dir")
-    val old = openQuantizedIndex(spark, dir)
-    val nlist = if (newNlist > 0) newNlist else old.nlist
-    buildQuantizedIndex(
-      old.vecs.unionByName(old.vecsAppends).select(col("item_id"), col("item_vec")),
-      "item_id", "item_vec", newDir, nlist, trained, iters, trainSample, spreadSeeds)
-  }
-
-  /** [[indexHealth]] for the quantized family. The byte-coded cells don't
-    * store floats, so the assignment-quality signal is the asymmetric
-    * `int8_cosine(own centroid, code)` — the same metric the probe ranks
-    * by, which is the point: health measures fitness under the distance
-    * the index actually serves with. Both tails are landed in lockstep
-    * ([[landQuantizedAppendBatch]]), so the code tail IS the append
-    * population and no float scan is needed. Same output schema and
-    * [[maintenanceDue]] contract as the float report; oracled by x209. */
-  def quantizedIndexHealth(index: QuantizedIndex): DataFrame =
-    healthReport(index.cellsQ, index.cellsQAppends, index.centroids,
-      graft.functions.Exprs.int8_cosine(col("centroid"), col("code")))
-
-  /** Serve top-k through the QUANTIZED index: map-side nprobe centroid
-    * ranking (identical to [[annServeBatch]]), probe join against the
-    * byte-coded cells ranking by asymmetric int8 cosine, a k·`refine`
-    * shortlist per query through the k-bounded heap aggregate, then an
-    * EXACT full-precision re-rank of just the shortlist against the
-    * `item_id`-bucketed float table. Output schema and every-query-gets-a-
-    * verdict semantics match [[annServeBatch]]; served scores are exact
-    * cosines, so quantization error can only reorder the shortlist CUT,
-    * never a served score. */
-  def annServeQuantizedBatch(arrivals: DataFrame, index: QuantizedIndex,
-      idCol: String, tsCol: String, vecCol: String,
-      k: Int = 10, nprobe: Int = 4, refine: Int = 4): DataFrame = {
-    require(!arrivals.isStreaming, "quantized serve twin takes a batch relation")
-    serveQuantizedPlan(arrivals, index, idCol, tsCol, vecCol, k, nprobe, refine, None)
-  }
-
-  /** STREAMING quantized serve — [[annServeQuantizedBatch]]'s plan over an
-    * arrival stream. Structurally this chains TWO stateful aggregations in
-    * append mode (the k·refine shortlist heap, then the exact-re-rank
-    * top-k heap) with two stream-static joins between and after them —
-    * the multiple-stateful-operator shape Spark supports when every
-    * stateful step groups on the SAME watermarked event-time column, as
-    * both heaps here do (query_id, ts). Rows finalize when the watermark
-    * passes their event time, same as [[annServe]]. */
-  def annServeQuantized(arrivals: DataFrame, index: QuantizedIndex,
-      idCol: String, tsCol: String, vecCol: String,
-      k: Int = 10, nprobe: Int = 4, refine: Int = 4,
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(arrivals.isStreaming,
-      "arrivals must be a streaming relation; use annServeQuantizedBatch for the batch twin")
-    serveQuantizedPlan(arrivals, index, idCol, tsCol, vecCol, k, nprobe,
-      refine, Some(watermarkDelay))
-  }
-
-  private def serveQuantizedPlan(arrivals: DataFrame, index: QuantizedIndex,
-      idCol: String, tsCol: String, vecCol: String,
-      k: Int, nprobe: Int, refine: Int,
-      watermarkDelay: Option[String]): DataFrame = {
-    require(k >= 1, s"k must be positive, got $k")
-    require(refine >= 1, s"refine must be positive, got $refine")
-    require(nprobe >= 1 && nprobe <= index.centroids.length,
-      s"nprobe must be in [1, ${index.centroids.length}], got $nprobe")
-    val built = arrivals.select(
-      col(idCol).cast("long").as("query_id"),
-      col(tsCol).as("ts"),
-      col(vecCol).as("query_vec"))
-    val base = watermarkDelay.fold(built)(built.withWatermark("ts", _))
-    val probes = base.select(col("query_id"), col("ts"), col("query_vec"),
-      explode(slice(reverse(array_sort(
-        Similarity.centroidScores(col("query_vec"), index.centroids))),
-        1, nprobe)).as("probe"))
-      .select(col("query_id"), col("ts"), col("query_vec"),
-        (-col("probe.ncid")).as("centroid_id"))
-    val ok = col("item_id").isNotNull && col("item_id") =!= col("query_id")
-    // the append tail joins as a SECOND branch (same reasoning as the
-    // float serve plan: a bucketed∪unbucketed union would strip the
-    // bucket pre-partitioning from the whole probe join)
-    def scoredAgainst(cells: DataFrame): DataFrame =
-      probes.join(cells, Seq("centroid_id"), "left_outer")
-        .select(col("query_id"), col("ts"), col("query_vec"),
-          when(ok, graft.functions.Exprs.int8_cosine(
-            col("query_vec"), col("code"))).as("aq"),
-          when(ok, col("item_id")).as("cand_id"))
-    val scoredQ = scoredAgainst(index.cellsQ)
-      .unionByName(scoredAgainst(index.cellsQAppends))
-    // the shortlist: k·refine candidates per query by (approx DESC, id) —
-    // the ONLY pass over the (4× smaller) quantized cells
-    val short = scoredQ.groupBy(col("query_id"), col("ts"))
-      .agg(first(col("query_vec")).as("query_vec"),
-        graft.functions.TopKBuffer.top_k(
-          col("aq"), col("cand_id"), k * refine).as("shortk"))
-    // exact re-rank of the probed slice: k·refine rows per query move to
-    // the float table's buckets; the corpus side never shuffles. The tail
-    // chains as a second LEFT join + coalesce — item ids are disjoint
-    // between base and tail, so each shortlisted id resolves exactly once
-    val vecsApp = index.vecsAppends.select(col("item_id"),
-      col("item_vec").as("__tv"))
-    val rer = short
-      .select(col("query_id"), col("ts"), col("query_vec"),
-        explode(col("shortk")).as("hit"))
-      .select(col("query_id"), col("ts"), col("query_vec"),
-        col("hit.id").as("item_id"))
-      .join(index.vecs, Seq("item_id"), "left_outer")
-      .join(vecsApp, Seq("item_id"), "left_outer")
-      .select(col("query_id"), col("ts"),
-        cosine_sim(col("query_vec"),
-          coalesce(col("item_vec"), col("__tv"))).as("cs"), col("item_id"))
-    val hits = rer.groupBy(col("query_id"), col("ts"))
-      .agg(graft.functions.TopKBuffer.top_k(
-        col("cs"), col("item_id"), k).as("topk"))
-    base.select(col("query_id"), col("ts"))
-      .join(hits, Seq("query_id", "ts"), "left_outer")
-      .select(col("query_id"), col("ts"),
-        posexplode_outer(col("topk")).as(Seq("pos", "hit")))
-      .select(col("query_id"), col("ts"),
-        (col("pos") + 1).as("rank"),
-        col("hit.id").as("item_id"),
-        col("hit.ord").as("cos_sim"))
-  }
-
   /** @param arrivals streaming relation with (`idCol`, `tsCol`, `vecCol`)
+    * @param refine an inexact codec's shortlist is k·refine candidates
+    *               per query; the float codec ignores it
     * @return streaming `(query_id, ts, rank, item_id, cos_sim)` in append
     *         mode — rows finalize when the watermark passes their event
     *         time. A query whose probed cells hold no candidates still
     *         surfaces, with NULL rank/item/score (the admission operator's
-    *         every-arrival-gets-a-verdict contract). */
+    *         every-arrival-gets-a-verdict contract). Over an int8 index
+    *         this chains TWO stateful aggregations (the shortlist heap,
+    *         then the top-k heap) with a stream-static join between them —
+    *         the multiple-stateful-operator shape Spark supports when
+    *         every stateful step groups on the SAME watermarked event-time
+    *         column, as both heaps here do (query_id, ts). */
   def annServe(arrivals: DataFrame, index: ServingIndex,
       idCol: String, tsCol: String, vecCol: String,
-      k: Int = 10, nprobe: Int = 4,
+      k: Int = 10, nprobe: Int = 4, refine: Int = 4,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(arrivals.isStreaming,
       "arrivals must be a streaming relation; use annServeBatch for the batch twin")
-    servePlan(arrivals, index, idCol, tsCol, vecCol, k, nprobe, Some(watermarkDelay))
+    servePlan(arrivals, index, idCol, tsCol, vecCol, k, nprobe, refine,
+      Some(watermarkDelay))
   }
 
   /** The BATCH twin: the identical plan over a batch `arrivals` relation —
-    * what the streaming specs assert equality against, and the x201
-    * oracle's DataFrame side. */
+    * what the streaming specs assert equality against, and the x201/x203
+    * oracles' DataFrame side. */
   def annServeBatch(arrivals: DataFrame, index: ServingIndex,
       idCol: String, tsCol: String, vecCol: String,
-      k: Int = 10, nprobe: Int = 4): DataFrame = {
+      k: Int = 10, nprobe: Int = 4, refine: Int = 4): DataFrame = {
     require(!arrivals.isStreaming, "batch twin takes a batch relation")
-    servePlan(arrivals, index, idCol, tsCol, vecCol, k, nprobe, None)
+    servePlan(arrivals, index, idCol, tsCol, vecCol, k, nprobe, refine, None)
   }
 
   private def servePlan(arrivals: DataFrame, index: ServingIndex,
       idCol: String, tsCol: String, vecCol: String,
-      k: Int, nprobe: Int, watermarkDelay: Option[String]): DataFrame = {
+      k: Int, nprobe: Int, refine: Int, watermarkDelay: Option[String]): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
+    require(refine >= 1, s"refine must be positive, got $refine")
     require(nprobe >= 1 && nprobe <= index.centroids.length,
       s"nprobe must be in [1, ${index.centroids.length}], got $nprobe")
     val base = arrivals.select(
@@ -769,15 +545,18 @@ object AnnStreams {
     // The append tail joins as a SECOND branch rather than a union into
     // the cells relation — unioning bucketed+unbucketed sides would strip
     // the bucket pre-partitioning from the whole join; this way the
-    // lake-sized base keeps it and only the small tail joins plain.
+    // lake-sized base keeps it and only the small tail joins plain. An
+    // inexact codec carries the query vector on for its re-rank.
     val ok = col("item_id").isNotNull && col("item_id") =!= col("query_id")
+    val carried = if (index.codec.exact) Nil else Seq(col("query_vec"))
     def scoredAgainst(cells: DataFrame): DataFrame =
       probes.join(cells, Seq("centroid_id"), "left_outer")
-        .select(col("query_id"), col("ts"),
-          when(ok, cosine_sim(col("query_vec"), col("item_vec"))).as("s"),
-          when(ok, col("item_id")).as("cand_id"))
+        .select(Seq(col("query_id"), col("ts")) ++ carried ++ Seq(
+          when(ok, index.codec.score(col("query_vec"), col(index.codec.payload))).as("s"),
+          when(ok, col("item_id")).as("cand_id")): _*)
     val scored = scoredAgainst(index.cells)
       .unionByName(scoredAgainst(index.appends))
+    val ranked = index.vecs.fold(scored)(reRanked(scored, _, k * refine))
     // ONE stateful aggregation with a HARD k-sized buffer — the existing
     // top_k TypedImperativeAggregate (graft.functions.TopKAgg, the x19
     // kernel): the collect_list spelling held EVERY candidate in state
@@ -787,7 +566,7 @@ object AnnStreams {
     // NULLed candidates update nothing; an all-NULL group evaluates to an
     // empty array, which posexplode_outer surfaces as a NULL-rank verdict
     // row.
-    scored
+    ranked
       .groupBy(col("query_id"), col("ts"))
       .agg(graft.functions.TopKBuffer.top_k(
         col("s"), col("cand_id"), k).as("topk"))
@@ -798,4 +577,28 @@ object AnnStreams {
         col("hit.id").as("item_id"),
         col("hit.ord").as("cos_sim"))
   }
+
+  /** An inexact codec's second pass: the `shortlist` best candidates per
+    * query by (approx DESC, id) — the ONLY pass over the coded cells —
+    * then their EXACT cosines against the `item_id`-bucketed float table:
+    * shortlist rows move to its buckets, the corpus side never shuffles.
+    * The tail chains as a second LEFT join + coalesce — item ids are
+    * disjoint between base and tail, so each shortlisted id resolves
+    * exactly once. Quantization error can therefore only reorder the
+    * shortlist CUT, never a served score. A query with no candidate keeps
+    * one NULL row (explode_outer), so it still gets its verdict. */
+  private def reRanked(scored: DataFrame, vecs: Vecs, shortlist: Int): DataFrame =
+    scored.groupBy(col("query_id"), col("ts"))
+      .agg(first(col("query_vec")).as("query_vec"),
+        graft.functions.TopKBuffer.top_k(col("s"), col("cand_id"), shortlist).as("shortk"))
+      .select(col("query_id"), col("ts"), col("query_vec"),
+        explode_outer(col("shortk")).as("hit"))
+      .select(col("query_id"), col("ts"), col("query_vec"),
+        col("hit.id").as("item_id"))
+      .join(vecs.base, Seq("item_id"), "left_outer")
+      .join(vecs.appends.select(col("item_id"), col("item_vec").as("__tv")),
+        Seq("item_id"), "left_outer")
+      .select(col("query_id"), col("ts"),
+        cosine_sim(col("query_vec"), coalesce(col("item_vec"), col("__tv"))).as("s"),
+        col("item_id").as("cand_id"))
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The maintenance POLICY as a first-class library surface.
   *
   * Rounds 16–18 built the pieces — per-family health reports
-  * ([[AnnStreams.indexHealth]] / [[AnnStreams.quantizedIndexHealth]] /
-  * [[DedupStreams.admissionHealth]]), the due-flag decisions
+  * ([[AnnStreams.indexHealth]] / [[DedupStreams.admissionHealth]]), the
+  * due-flag decisions
   * ([[AnnStreams.maintenanceDue]] / [[DedupStreams.maintenanceDueAdmission]]),
   * the √N geometry rule ([[AnnStreams.scheduledNlist]]), and the blue/green
   * acts (retrain / re-index / compact). This object is the loop a
@@ -18,7 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   else no-op
   * }}}
   *
-  * family-dispatched through [[Family]], with the post-act invariant —
+  * family-dispatched through [[Family]] (two: the IVF serving index of
+  * either cell codec, whose acts read the codec from the index's `meta/`,
+  * and the admission index), with the post-act invariant —
   * the new index must itself report healthy — enforced in the tick, not
   * left to the caller. StreamBench's six policy legs drive exactly this
   * tick on a cadence under live serving load (the r18 matrix receipts);
@@ -46,7 +48,7 @@ object Maintenance {
   final case class Compacted(dirAfter: String) extends Act
 
   /** One on-disk index family's health + acts, as the tick needs them.
-    * All three implementations delegate to the public per-family API —
+    * Both implementations delegate to the public per-family API —
     * this trait adds no new semantics, only dispatch. */
   trait Family {
     def health(spark: SparkSession, dir: String): DataFrame
@@ -59,8 +61,8 @@ object Maintenance {
     def compact(spark: SparkSession, dir: String, newDir: String): Act
   }
 
-  /** Float IVF serving index ([[AnnStreams.ServingIndex]]). */
-  object FloatIvf extends Family {
+  /** IVF serving index ([[AnnStreams.ServingIndex]]), float or int8 cells. */
+  object Ivf extends Family {
     def health(spark: SparkSession, dir: String): DataFrame =
       AnnStreams.indexHealth(AnnStreams.openServingIndex(spark, dir))
     def due(health: DataFrame): AnnStreams.Maintenance =
@@ -77,23 +79,8 @@ object Maintenance {
     }
   }
 
-  /** int8-quantized IVF serving index ([[AnnStreams.QuantizedIndex]]). */
-  object QuantizedIvf extends Family {
-    def health(spark: SparkSession, dir: String): DataFrame =
-      AnnStreams.quantizedIndexHealth(AnnStreams.openQuantizedIndex(spark, dir))
-    def due(health: DataFrame): AnnStreams.Maintenance =
-      AnnStreams.maintenanceDue(health)
-    def retrain(spark: SparkSession, dir: String, newDir: String,
-        health: DataFrame): Act = {
-      val n = AnnStreams.scheduledNlist(health)
-      AnnStreams.retrainQuantizedIndex(spark, dir, newDir, newNlist = n)
-      Retrained(newDir, n)
-    }
-    def compact(spark: SparkSession, dir: String, newDir: String): Act = {
-      AnnStreams.compactQuantizedIndex(spark, dir, newDir)
-      Compacted(newDir)
-    }
-  }
+  /** [[Ivf]] under its earlier name — the benchmark (perfbench) binds it. */
+  val FloatIvf: Family = Ivf
 
   /** Near-dup admission index ([[DedupStreams.AdmissionIndex]]); its
     * retrain branch is [[DedupStreams.reindexAdmission]] — the hot order

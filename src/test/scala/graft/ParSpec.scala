@@ -106,6 +106,20 @@ class ParSpec extends SparkSpec {
       assert(got.toSeq == want,
         s"iter $iter (n=$n, nKeys=$nKeys, inParts=$inParts, shufParts=$shufParts)")
     }
+    // a BIGINT key: the totals come back keyed by Long, per key
+    val rows = randomRel(rnd, 60, 3)
+    val longKeyed = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      .withColumn("k", col("k").cast("long"))
+    val totals: Map[Long, Seq[Long]] = Par.exclusivePrefixByWithTotals(
+      longKeyed, "k", col("ord").asc, Seq("w2" -> "p2"))._2
+    val wantTotals = rows.groupBy(_.getInt(0).toLong)
+      .map { case (k, grp) => k -> Seq(grp.map(_.getLong(3)).sum) }
+    assert(totals == wantTotals)
+    assert(totals.getOrElse(0, Seq(-1L)) == wantTotals.getOrElse(0L, Seq(-1L)))
+    // a key whose boxed value never equals an integral lookup is refused
+    intercept[IllegalArgumentException](Par.exclusivePrefixByWithTotals(
+      longKeyed.withColumn("k", col("k").cast("decimal(10,0)")), "k",
+      col("ord").asc, Seq("w2" -> "p2")))
   }
 
   test("exclusivePrefixBy offsets collect stays within nPartitions + nKeys − 1") {

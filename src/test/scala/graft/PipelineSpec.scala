@@ -8,7 +8,9 @@ import graft.io.Readers
   * fixtures, asserting the §7.3 semantic traps. */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val base: String = {
+  private lazy val base: String = newBase()
+
+  private def newBase(): String = {
     val dir = Files.createTempDirectory("graft-pipe").toString
     // bronze CSVs come from test resources; the XLSX is generated
     val date = "2024-01-15"
@@ -102,5 +104,21 @@ class PipelineSpec extends SparkSpec {
     // EP2: rebuild gold from the silver parquet contract — same result
     val json2 = pipe.runSilverToGold()
     assert(json2.contains("\"rows\": 5"))
+  }
+
+  test("EP1 releases its caches: persisted RDDs back to the pre-run count, rewritten bronze re-read") {
+    val dir = newBase()
+    val fresh = new Pipeline(spark, dir, "2024-01-15")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    fresh.runBronzeToSilverAndGold()
+    // the same bronze path, one cell rewritten: the second run must read it
+    val csv = Paths.get(
+      s"$dir/bronze/housing_affordability/ingest_date=2024-01-15/housing2019-23.csv")
+    Files.writeString(csv, Files.readString(csv).replace("433661", "433662"))
+    fresh.runBronzeToSilverAndGold()
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    val fulton = Readers.parquet(spark, s"$dir/gold/county_analysis/ingest_date=2024-01-15")
+      .filter("lea_id = '601'").select("occupied_housing_units").head().getDouble(0)
+    assert(fulton == 433662.0)
   }
 }

@@ -413,13 +413,12 @@ class PlanSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val fBuilt = AnnStreams.buildServingIndex(vecs, "vec_id", "embedding",
       s"$tmp/f", nlist = 4, trained = false)
-    val qBuilt = AnnStreams.buildQuantizedIndex(vecs, "vec_id", "embedding",
-      s"$tmp/q", nlist = 4, trained = false)
+    val qBuilt = AnnStreams.buildServingIndex(vecs, "vec_id", "embedding",
+      s"$tmp/q", nlist = 4, trained = false, codec = AnnStreams.Codec.Int8)
     val tail = vecs.filter($"vec_id" % 16 === 3)
       .select(($"vec_id" + 64L).as("vec_id"), $"embedding")
     AnnStreams.landAppendBatch(tail, fBuilt, "vec_id", "embedding", batchId = 0L)
-    AnnStreams.landQuantizedAppendBatch(tail, qBuilt, "vec_id", "embedding",
-      batchId = 0L)
+    AnnStreams.landAppendBatch(tail, qBuilt, "vec_id", "embedding", batchId = 0L)
     val q = vecs.filter($"vec_id" % 9 === 0)
       .select($"vec_id".as("query_id"),
         lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
@@ -431,8 +430,8 @@ class PlanSpec extends SparkSpec {
         "float" -> AnnStreams.annServeBatch(q,
           AnnStreams.openServingIndex(spark, s"$tmp/f"),
           "query_id", "ts", "embedding", k = 3, nprobe = 2),
-        "quantized" -> AnnStreams.annServeQuantizedBatch(q,
-          AnnStreams.openQuantizedIndex(spark, s"$tmp/q"),
+        "quantized" -> AnnStreams.annServeBatch(q,
+          AnnStreams.openServingIndex(spark, s"$tmp/q"),
           "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 4))
       plans.foreach { case (fam, df) =>
         val sp = df.queryExecution.sparkPlan

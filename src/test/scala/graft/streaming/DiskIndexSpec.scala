@@ -96,8 +96,9 @@ class DiskIndexSpec extends graft.SparkSpec {
         (if (d == axis) 1.0f else 0.0f) + 0.01f * ((i * 7 + d * 3) % 11))
       (i.toLong, v.toSeq)
     }.toDF("vec_id", "embedding")
-    val q = graft.streaming.AnnStreams.buildQuantizedIndex(
-      corpus, "vec_id", "embedding", s"$tmp/q", nlist = 4, trained = false)
+    val q = graft.streaming.AnnStreams.buildServingIndex(
+      corpus, "vec_id", "embedding", s"$tmp/q", nlist = 4, trained = false,
+      codec = graft.streaming.AnnStreams.Codec.Int8)
     val f = graft.streaming.AnnStreams.buildServingIndex(
       corpus, "vec_id", "embedding", s"$tmp/f", nlist = 4, trained = false)
     val arrivals = (100 until 110).map { i =>
@@ -112,14 +113,14 @@ class DiskIndexSpec extends graft.SparkSpec {
     // refine large enough to shortlist EVERY probed candidate: the exact
     // re-rank then sees all of them, so quantization cannot change the
     // answer — quantized == float index, score for score
-    val exact = served(graft.streaming.AnnStreams.annServeQuantizedBatch(
+    val exact = served(graft.streaming.AnnStreams.annServeBatch(
       arrivals, q, "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 40))
     val float = served(graft.streaming.AnnStreams.annServeBatch(
       arrivals, f, "query_id", "ts", "embedding", k = 3, nprobe = 2))
     assert(exact == float,
       s"refine >= cell size must equal the float index:\n$exact\nvs\n$float")
     // served scores are exact cosines even at tight refine
-    val tight = served(graft.streaming.AnnStreams.annServeQuantizedBatch(
+    val tight = served(graft.streaming.AnnStreams.annServeBatch(
       arrivals, q, "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 1))
     val floatByKey = float.map(r => (r._1, r._3) -> r._4).toMap
     tight.foreach { case (qid, _, item, cs) =>
@@ -127,10 +128,10 @@ class DiskIndexSpec extends graft.SparkSpec {
         assert(cs == expected, s"re-ranked score must be the exact cosine for ($qid,$item)"))
     }
     // driver-bounce reopen serves identically
-    spark.catalog.listTables().filter(_.name.startsWith("graft_annq")).collect()
+    spark.catalog.listTables().filter(_.name.startsWith("graft_ann_")).collect()
       .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
-    val reopened = graft.streaming.AnnStreams.openQuantizedIndex(spark, s"$tmp/q")
-    assert(served(graft.streaming.AnnStreams.annServeQuantizedBatch(
+    val reopened = graft.streaming.AnnStreams.openServingIndex(spark, s"$tmp/q")
+    assert(served(graft.streaming.AnnStreams.annServeBatch(
       arrivals, reopened, "query_id", "ts", "embedding",
       k = 3, nprobe = 2, refine = 40)) == exact)
     // the byte claim: int8 cells materially smaller than float cells
@@ -140,7 +141,7 @@ class DiskIndexSpec extends graft.SparkSpec {
         else f.length()
       walk(new java.io.File(p))
     }
-    val qb = dirBytes(s"$tmp/q/cellsq"); val fb = dirBytes(s"$tmp/f/cells")
+    val qb = dirBytes(s"$tmp/q/cells"); val fb = dirBytes(s"$tmp/f/cells")
     assert(qb < fb, s"quantized cells must be smaller: $qb vs $fb bytes")
   }
 
@@ -156,43 +157,45 @@ class DiskIndexSpec extends graft.SparkSpec {
     val late = Seq(
       (3L, Seq(0.1f, 0.9f, 0.0f, 0.0f)), (4L, Seq(0.95f, 0.05f, 0.0f, 0.0f)))
     val full = base.unionByName(late.toDF("vec_id", "embedding"))
-    val built = graft.streaming.AnnStreams.buildQuantizedIndex(
-      base, "vec_id", "embedding", s"$tmp/idx", nlist = 2, trained = false)
-    assert(built.cellsQAppends.isEmpty && built.vecsAppends.isEmpty)
+    val built = graft.streaming.AnnStreams.buildServingIndex(
+      base, "vec_id", "embedding", s"$tmp/idx", nlist = 2, trained = false,
+      codec = graft.streaming.AnnStreams.Codec.Int8)
+    assert(built.appends.isEmpty && built.vecs.get.appends.isEmpty)
     // stream the two late vectors in across two micro-batches
     val input = MemoryStream[(Long, Seq[Float])](spark)
-    val q = graft.streaming.AnnStreams.appendQuantizedStream(
+    val q = graft.streaming.AnnStreams.appendStream(
       input.toDF().toDF("vec_id", "embedding"), built,
       "vec_id", "embedding", s"$tmp/ckpt")
     try {
       input.addData(late.take(1)); q.processAllAvailable()
       input.addData(late.drop(1)); q.processAllAvailable()
     } finally q.stop()
-    val reopened = graft.streaming.AnnStreams.openQuantizedIndex(spark, s"$tmp/idx")
-    assert(reopened.cellsQAppends.count() == 2 && reopened.vecsAppends.count() == 2)
+    val reopened = graft.streaming.AnnStreams.openServingIndex(spark, s"$tmp/idx")
+    assert(reopened.appends.count() == 2 && reopened.vecs.get.appends.count() == 2)
     val arrivals = Seq(
       (100L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Seq(1.0f, 0.05f, 0.0f, 0.0f)),
       (101L, java.sql.Timestamp.valueOf("2024-01-01 00:00:01"), Seq(0.05f, 1.0f, 0.0f, 0.0f)))
       .toDF("query_id", "ts", "embedding")
-    def served(idx: graft.streaming.AnnStreams.QuantizedIndex) =
-      graft.streaming.AnnStreams.annServeQuantizedBatch(
+    def served(idx: graft.streaming.AnnStreams.ServingIndex) =
+      graft.streaming.AnnStreams.annServeBatch(
         arrivals, idx, "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 2)
         .select($"query_id", $"rank".cast("int"), $"item_id", $"cos_sim")
         .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     val viaAppends = served(reopened)
     // ground truth: rebuild over the whole corpus — same seeded centroids
-    val rebuilt = graft.streaming.AnnStreams.buildQuantizedIndex(
-      full, "vec_id", "embedding", s"$tmp/idx-full", nlist = 2, trained = false)
+    val rebuilt = graft.streaming.AnnStreams.buildServingIndex(
+      full, "vec_id", "embedding", s"$tmp/idx-full", nlist = 2, trained = false,
+      codec = graft.streaming.AnnStreams.Codec.Int8)
     assert(viaAppends == served(rebuilt), s"$viaAppends vs ${served(rebuilt)}")
     // appended vectors actually serve (id 3 answers the y-axis query)
     assert(viaAppends.filter(_._1 == 101L).map(_._3).contains(3L))
     // blue/green compaction: same results, empty tails, old dir readable
-    val compacted = graft.streaming.AnnStreams.compactQuantizedIndex(
+    val compacted = graft.streaming.AnnStreams.compactIndex(
       spark, s"$tmp/idx", s"$tmp/idx-compact")
-    assert(compacted.cellsQAppends.isEmpty && compacted.vecsAppends.isEmpty)
-    assert(compacted.cellsQ.count() == 5 && compacted.vecs.count() == 5)
+    assert(compacted.appends.isEmpty && compacted.vecs.get.appends.isEmpty)
+    assert(compacted.cells.count() == 5 && compacted.vecs.get.base.count() == 5)
     assert(served(compacted) == viaAppends)
-    assert(served(graft.streaming.AnnStreams.openQuantizedIndex(
+    assert(served(graft.streaming.AnnStreams.openServingIndex(
       spark, s"$tmp/idx")) == viaAppends)
   }
 
@@ -206,8 +209,9 @@ class DiskIndexSpec extends graft.SparkSpec {
         (if (d == axis) 1.0f else 0.0f) + 0.01f * ((i * 7 + d * 3) % 11))
       (i.toLong, v.toSeq)
     }.toDF("vec_id", "embedding")
-    val idx = graft.streaming.AnnStreams.buildQuantizedIndex(
-      corpus, "vec_id", "embedding", s"$tmp/idx", nlist = 4, trained = false)
+    val idx = graft.streaming.AnnStreams.buildServingIndex(
+      corpus, "vec_id", "embedding", s"$tmp/idx", nlist = 4, trained = false,
+      codec = graft.streaming.AnnStreams.Codec.Int8)
     def ts(s: Int) = new java.sql.Timestamp(1704067200000L + s * 1000L)
     val arrivals = (0 until 6).map { i =>
       val axis = i % 4
@@ -216,7 +220,7 @@ class DiskIndexSpec extends graft.SparkSpec {
       (100L + i, ts(i), v.toSeq)
     }
     val input = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])](spark)
-    val q = graft.streaming.AnnStreams.annServeQuantized(
+    val q = graft.streaming.AnnStreams.annServe(
       input.toDF().toDF("query_id", "ts", "embedding"), idx,
       "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 2,
       watermarkDelay = "0 seconds")
@@ -234,7 +238,7 @@ class DiskIndexSpec extends graft.SparkSpec {
       .filter($"query_id" < 900)
       .select($"query_id", $"rank".cast("int"), $"item_id", $"cos_sim")
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val expected = graft.streaming.AnnStreams.annServeQuantizedBatch(
+    val expected = graft.streaming.AnnStreams.annServeBatch(
       arrivals.toDF("query_id", "ts", "embedding"), idx,
       "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 2)
       .select($"query_id", $"rank".cast("int"), $"item_id", $"cos_sim")

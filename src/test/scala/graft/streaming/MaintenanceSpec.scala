@@ -26,7 +26,7 @@ class MaintenanceSpec extends graft.SparkSpec {
     AnnStreams.buildServingIndex(
       baseVecs, "vec_id", "embedding", s"$root/blue", nlist = 1, trained = false)
     var dueFired = false
-    val act = Maintenance.tick(spark, Maintenance.FloatIvf, s"$root/blue",
+    val act = Maintenance.tick(spark, Maintenance.Ivf, s"$root/blue",
       sys.error("a healthy tick must not evaluate newDir"),
       onDue = () => dueFired = true)
     assert(act == Maintenance.NoOp(s"$root/blue"))
@@ -43,7 +43,7 @@ class MaintenanceSpec extends graft.SparkSpec {
         .toDF("vec_id", "embedding"),
       built, "vec_id", "embedding", batchId = 0L)
     var dueFired = false
-    val act = Maintenance.tick(spark, Maintenance.FloatIvf, s"$root/blue",
+    val act = Maintenance.tick(spark, Maintenance.Ivf, s"$root/blue",
       s"$root/green", onDue = () => dueFired = true)
     // 11 rows folded -> scheduled nlist round(sqrt(11)) = 3
     assert(act == Maintenance.Retrained(s"$root/green", newNlist = 3))
@@ -53,7 +53,7 @@ class MaintenanceSpec extends graft.SparkSpec {
       && green.cells.count() == 11L)
     // and the next tick on green observes health (tick itself already
     // require'd it; this pins the steady state a poller would see)
-    assert(Maintenance.tick(spark, Maintenance.FloatIvf, s"$root/green",
+    assert(Maintenance.tick(spark, Maintenance.Ivf, s"$root/green",
       sys.error("green must be healthy")) == Maintenance.NoOp(s"$root/green"))
   }
 
@@ -67,7 +67,7 @@ class MaintenanceSpec extends graft.SparkSpec {
     AnnStreams.landAppendBatch(
       Seq((100L, Seq(1.0f, 0.1f, 0.0f))).toDF("vec_id", "embedding"),
       built, "vec_id", "embedding", batchId = 0L)
-    val act = Maintenance.tick(spark, Maintenance.FloatIvf, s"$root/blue",
+    val act = Maintenance.tick(spark, Maintenance.Ivf, s"$root/blue",
       s"$root/green")
     assert(act == Maintenance.Compacted(s"$root/green"))
     val green = AnnStreams.openServingIndex(spark, s"$root/green")
@@ -75,20 +75,53 @@ class MaintenanceSpec extends graft.SparkSpec {
       && green.cells.count() == 10L)
   }
 
-  test("QuantizedIvf: the same tick drives the int8 family") {
+  test("Ivf, int8 cells: compact then retrain; each green reopens as int8") {
     import spark.implicits._
     val root = tmp("maint-q")
-    val built = AnnStreams.buildQuantizedIndex(
-      baseVecs, "vec_id", "embedding", s"$root/blue", nlist = 1, trained = false)
-    AnnStreams.landQuantizedAppendBatch(
+    val arrivals = Seq((500L, Seq(1.0f, 0.12f, 0.0f)), (501L, Seq(-1.0f, 0.05f, 0.0f)))
+      .map { case (id, v) => (id, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), v) }
+      .toDF("query_id", "ts", "embedding")
+    def served(idx: AnnStreams.ServingIndex): Seq[(Long, Int, Long, Double)] =
+      AnnStreams.annServeBatch(arrivals, idx, "query_id", "ts", "embedding",
+        k = 3, nprobe = 1, refine = 4)
+        .select($"query_id", $"rank".cast("int"), $"item_id", $"cos_sim")
+        .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    // each green dir: a handle opened right after the act, then a
+    // driver-bounce reopen — codec and re-rank table come back from meta/,
+    // same served rows
+    def reopensAsInt8(green: String): Unit = {
+      val live = AnnStreams.openServingIndex(spark, green)
+      Seq("cells", "vecs").foreach(kind => spark.sql(
+        s"DROP TABLE ${DiskIndex.tableName(spark, s"graft_ann_$kind", green)}"))
+      val reopened = AnnStreams.openServingIndex(spark, green)
+      assert(reopened.codec == AnnStreams.Codec.Int8 && reopened.vecs.isDefined)
+      assert(served(reopened) == served(live))
+    }
+    // 8 base rows; one verbatim copy of the centroid is 12.5% growth with
+    // no drift signal, so the first tick COMPACTS
+    val built = AnnStreams.buildServingIndex(
+      baseVecs.filter($"vec_id" < 18L), "vec_id", "embedding", s"$root/blue",
+      nlist = 1, trained = false, codec = AnnStreams.Codec.Int8)
+    AnnStreams.landAppendBatch(
+      Seq((100L, Seq(1.0f, 0.1f, 0.0f))).toDF("vec_id", "embedding"),
+      built, "vec_id", "embedding", batchId = 0L)
+    val blueRows = served(AnnStreams.openServingIndex(spark, s"$root/blue"))
+    assert(Maintenance.tick(spark, Maintenance.Ivf, s"$root/blue", s"$root/teal")
+      == Maintenance.Compacted(s"$root/teal"))
+    assert(served(AnnStreams.openServingIndex(spark, s"$root/teal")) == blueRows)
+    reopensAsInt8(s"$root/teal")
+    // an anti-parallel tail on the compacted index: the second tick RETRAINS
+    AnnStreams.landAppendBatch(
       Seq((1L, Seq(-1.0f, 0.0f, 0.0f)), (2L, Seq(-1.0f, 0.1f, 0.0f)))
         .toDF("vec_id", "embedding"),
-      built, "vec_id", "embedding", batchId = 0L)
-    val act = Maintenance.tick(spark, Maintenance.QuantizedIvf, s"$root/blue",
+      AnnStreams.openServingIndex(spark, s"$root/teal"), "vec_id", "embedding",
+      batchId = 0L)
+    val act = Maintenance.tick(spark, Maintenance.Ivf, s"$root/teal",
       s"$root/green")
     assert(act == Maintenance.Retrained(s"$root/green", newNlist = 3))
-    assert(AnnStreams.openQuantizedIndex(spark, s"$root/green")
-      .cellsQ.count() == 11L)
+    assert(AnnStreams.openServingIndex(spark, s"$root/green")
+      .cells.count() == 11L)
+    reopensAsInt8(s"$root/green")
   }
 
   test("Admission: boilerplate drift re-indexes; verbatim-copy growth compacts") {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The quantizer RETRAIN path (r16 verdict #1 — the last index family
-  * without drift management): [[AnnStreams.retrainIndex]] /
-  * [[AnnStreams.retrainQuantizedIndex]]. The load-bearing contract is
+  * without drift management): [[AnnStreams.retrainIndex]]
+  * over either cell codec. The load-bearing contract is
   * fold-then-build equivalence — retraining an index that grew through
   * the real append path serves value-for-value like a FRESH build over
   * the combined corpus — plus the drift story itself: appends pile into
@@ -154,44 +154,46 @@ class RetrainSpec extends graft.SparkSpec {
       (i.toLong, Seq.tabulate(4)(d =>
         (if (d == axis) 1.0f else 0.0f) + 0.01f * ((i * 5 + d) % 7)))
     }
-    val built = AnnStreams.buildQuantizedIndex(
-      base, "vec_id", "embedding", s"$tmp/blue", nlist = 2, trained = false)
-    AnnStreams.landQuantizedAppendBatch(
+    val built = AnnStreams.buildServingIndex(
+      base, "vec_id", "embedding", s"$tmp/blue", nlist = 2, trained = false,
+      codec = AnnStreams.Codec.Int8)
+    AnnStreams.landAppendBatch(
       late.toDF("vec_id", "embedding"), built, "vec_id", "embedding", batchId = 0L)
-    val retrained = AnnStreams.retrainQuantizedIndex(
+    val retrained = AnnStreams.retrainIndex(
       spark, s"$tmp/blue", s"$tmp/green", trained = false)
-    assert(retrained.cellsQAppends.isEmpty && retrained.vecsAppends.isEmpty)
-    val fresh = AnnStreams.buildQuantizedIndex(
+    assert(retrained.appends.isEmpty && retrained.vecs.get.appends.isEmpty)
+    val fresh = AnnStreams.buildServingIndex(
       base.unionByName(late.toDF("vec_id", "embedding")),
-      "vec_id", "embedding", s"$tmp/fresh", nlist = 2, trained = false)
+      "vec_id", "embedding", s"$tmp/fresh", nlist = 2, trained = false,
+      codec = AnnStreams.Codec.Int8)
     // codes byte-for-byte: the retrain quantized the ORIGINAL floats — a
     // lossy code→decode→re-encode rebuild would differ here
-    def codes(idx: AnnStreams.QuantizedIndex): Seq[(Long, Seq[Byte])] = idx.cellsQ
+    def codes(idx: AnnStreams.ServingIndex): Seq[(Long, Seq[Byte])] = idx.cells
       .select($"item_id", $"code").as[(Long, Array[Byte])]
       .collect().map { case (id, c) => (id, c.toSeq) }.sortBy(_._1).toSeq
     assert(codes(retrained) == codes(fresh))
     val arrivals = Seq(
       (100L, ts0, Seq(1.0f, 0.05f, 0.0f, 0.0f)),
       (101L, ts0, Seq(0.0f, 0.05f, 1.0f, 0.0f))).toDF("query_id", "ts", "embedding")
-    def serveAll(idx: AnnStreams.QuantizedIndex) = served(
-      AnnStreams.annServeQuantizedBatch(arrivals, idx,
+    def serveAll(idx: AnnStreams.ServingIndex) = served(
+      AnnStreams.annServeBatch(arrivals, idx,
         "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 4))
     assert(serveAll(retrained) == serveAll(fresh))
     // an appended (drift-region) vector is served by the retrained index
     assert(serveAll(retrained).filter(_._1 == 101L).map(_._3).exists(_ < 4L))
     // newNlist: the retrain is where a growing corpus re-picks its cell
     // count — more cells, same exact served cosines at exhaustive probe
-    val wider = AnnStreams.retrainQuantizedIndex(
+    val wider = AnnStreams.retrainIndex(
       spark, s"$tmp/blue", s"$tmp/wide", trained = false, newNlist = 4)
     assert(wider.nlist == 4 && wider.centroids.length == 4)
-    val exactWide = served(AnnStreams.annServeQuantizedBatch(
+    val exactWide = served(AnnStreams.annServeBatch(
       arrivals, wider, "query_id", "ts", "embedding", k = 3, nprobe = 4, refine = 24))
-    val exactFresh = served(AnnStreams.annServeQuantizedBatch(
+    val exactFresh = served(AnnStreams.annServeBatch(
       arrivals, fresh, "query_id", "ts", "embedding", k = 3, nprobe = 2, refine = 24))
     assert(exactWide == exactFresh,
       "exhaustive probe must be geometry-invariant: retrained-wider == fresh")
     // reopen honors the new geometry
-    assert(AnnStreams.openQuantizedIndex(spark, s"$tmp/wide").nlist == 4)
+    assert(AnnStreams.openServingIndex(spark, s"$tmp/wide").nlist == 4)
   }
 
   test("indexHealth + maintenanceDue: tail growth trips compact, drift trips retrain") {
@@ -254,7 +256,7 @@ class RetrainSpec extends graft.SparkSpec {
       AnnStreams.Maintenance(compactDue = false, retrainDue = false))
   }
 
-  test("quantizedIndexHealth: the int8 serve metric drives the same maintenance triggers") {
+  test("int8 indexHealth: the serve metric drives the same maintenance triggers") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("health-q").toString
     val base = (0 until 40).map { i =>
@@ -262,21 +264,22 @@ class RetrainSpec extends graft.SparkSpec {
       (i.toLong, Seq.tabulate(4)(d =>
         (if (d == axis) 1.0f else 0.0f) + 0.01f * ((i * 7 + d * 3) % 11)))
     }.toDF("vec_id", "embedding")
-    val built = AnnStreams.buildQuantizedIndex(
-      base, "vec_id", "embedding", s"$tmp/idx", nlist = 4, trained = true)
-    assert(AnnStreams.maintenanceDue(AnnStreams.quantizedIndexHealth(built)) ==
+    val built = AnnStreams.buildServingIndex(
+      base, "vec_id", "embedding", s"$tmp/idx", nlist = 4, trained = true,
+      codec = AnnStreams.Codec.Int8)
+    assert(AnnStreams.maintenanceDue(AnnStreams.indexHealth(built)) ==
       AnnStreams.Maintenance(compactDue = false, retrainDue = false))
     // a drifted lockstep append (orthogonal axes): the int8 assignment
     // cosine gap trips retrain; tail size trips compact
-    AnnStreams.landQuantizedAppendBatch(
+    AnnStreams.landAppendBatch(
       (300 until 310).map { i =>
         val axis = 2 + i % 2
         (i.toLong, Seq.tabulate(4)(d =>
           (if (d == axis) 1.0f else 0.0f) + 0.01f * ((i * 3 + d) % 5)))
       }.toDF("vec_id", "embedding"),
       built, "vec_id", "embedding", batchId = 0L)
-    val drifted = AnnStreams.quantizedIndexHealth(
-      AnnStreams.openQuantizedIndex(spark, s"$tmp/idx"))
+    val drifted = AnnStreams.indexHealth(
+      AnnStreams.openServingIndex(spark, s"$tmp/idx"))
     val byLeg = drifted.collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(3)))).toMap
     assert(byLeg("base")._1 == 40L && byLeg("tail")._1 == 10L)
@@ -286,8 +289,8 @@ class RetrainSpec extends graft.SparkSpec {
     assert(AnnStreams.maintenanceDue(drifted) ==
       AnnStreams.Maintenance(compactDue = true, retrainDue = true))
     // the quantized retrain heals it
-    val healed = AnnStreams.quantizedIndexHealth(
-      AnnStreams.retrainQuantizedIndex(spark, s"$tmp/idx", s"$tmp/idx-re"))
+    val healed = AnnStreams.indexHealth(
+      AnnStreams.retrainIndex(spark, s"$tmp/idx", s"$tmp/idx-re"))
     assert(AnnStreams.maintenanceDue(healed) ==
       AnnStreams.Maintenance(compactDue = false, retrainDue = false))
   }
@@ -405,9 +408,10 @@ class RetrainSpec extends graft.SparkSpec {
     assert(AnnStreams.scheduledNlist(h, maxNlist = 4) == 4)
     assert(AnnStreams.scheduledNlist(h.limit(0)) == 1)
     // the quantized family reads the same schema
-    val q = AnnStreams.buildQuantizedIndex(vecs(0 until 64),
-      "vec_id", "embedding", s"$tmp/q", nlist = 8, trained = false)
-    assert(AnnStreams.scheduledNlist(AnnStreams.quantizedIndexHealth(q)) == 8)
+    val q = AnnStreams.buildServingIndex(vecs(0 until 64),
+      "vec_id", "embedding", s"$tmp/q", nlist = 8, trained = false,
+      codec = AnnStreams.Codec.Int8)
+    assert(AnnStreams.scheduledNlist(AnnStreams.indexHealth(q)) == 8)
   }
 
   test("indexHealth TRUNCATES the negative-average regime (measured DuckDB // parity)") {
